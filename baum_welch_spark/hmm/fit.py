@@ -4,19 +4,23 @@ The reference's dataflow (one Hadoop MR job per EM iteration,
 BaumWelchDriver.java:114-184) re-expressed Spark-first:
 
   E-step  (reference mapper M2-M6, BaumWelchMapper.java:143-258)
-      -> mapInPandas over the cached ``sequences`` DataFrame. Each Arrow
-         batch accumulates expected counts for *all* its sequences into
-         local NumPy arrays and emits ONE flattened count block
-         (~N + N^2 + N*M rows). This is the map-side combine the reference
-         wrote but disabled (BaumWelchCombiner.java, off at
-         BaumWelchDriver.java:171) — done in-UDF, so per-iteration shuffle
-         volume is O(partitions * N * (N + M)) regardless of corpus size.
-         The reference shuffles O(S*T*(2N+1)) stripe records (its T-fold
+      -> mapInArrow over the cached ``sequences`` DataFrame. Each Arrow
+         batch's ``obs`` list column enters the packed NumPy kernel as flat
+         symbols plus lengths (kernel.e_step_counts_packed); every batch of
+         a task accumulates into the same local arrays, and the task emits
+         ONE row: its loglik and its count block [pi | A | B] as one
+         array<double>. This is the map-side combine the reference wrote
+         but disabled (BaumWelchCombiner.java, off at
+         BaumWelchDriver.java:171), taken to one record per task. The
+         reference shuffles O(S*T*(2N+1)) stripe records (its T-fold
          duplicate-emission bug included, SURVEY §2.6 Q1).
 
-  shuffle + M-step  (reference A1-A4, BaumWelchReducer.java:49-149)
-      -> groupBy(kind, i, j).sum(weight) + window normalize. Catalyst runs
-         partial aggregation before the exchange automatically.
+  reduce + M-step  (reference A1-A4, BaumWelchReducer.java:49-149)
+      -> no shuffle: the driver collects one block per task and folds them
+         with one NumPy sum (fold_counts), then normalizes (kernel.m_step).
+         The DuckDB-checked faces get the tidy (kind, i, j, weight) rows
+         from a Catalyst posexplode + groupBy(pos) of the same blocks
+         (tidy_counts) and normalize them with a window (normalize_counts).
 
   model distribution  (reference: every map task re-reads the model from
       HDFS, BaumWelchMapper.java:54-117)
@@ -26,9 +30,11 @@ BaumWelchDriver.java:114-184) re-expressed Spark-first:
       BaumWelchDriver.java:196-207)
       -> driver-side NumPy on the already-collected tiny model.
 
-Scale posture: the only per-iteration actions are one job over the cached
-sequences (scan stays resident via persist) and a collect of ~N*(N+M)+N rows.
-Nothing data-sized ever reaches the driver.
+Scale posture: the only per-iteration action is one single-stage job over
+the cached sequences (scan stays resident via persist) whose result is one
+N + N^2 + N*M block per task. Nothing data-sized ever reaches the driver;
+what does is tasks x block, so a wide model over very many partitions wants
+a coalesced corpus (or a tree reduce, not built here).
 """
 
 from __future__ import annotations
@@ -38,12 +44,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
+from baum_welch_spark.hmm.kernel import e_step_counts_batch, e_step_counts_packed, m_step
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -53,78 +60,115 @@ from baum_welch_spark.hmm.model import (
 
 COUNTS_SCHEMA = "kind string, i int, j int, weight double"
 KIND_LOGLIK = "loglik"  # side-channel row: per-batch partial log-likelihood
+#: one row per E-step task: its summed loglik and its encode_counts block
+COUNT_BLOCK_SCHEMA = "loglik double, counts array<double>"
+
+
+def encode_counts(cpi: np.ndarray, cA: np.ndarray, cB: np.ndarray) -> np.ndarray:
+    """The count block of one E-step task: ``[pi | A.ravel() | B.ravel()]``."""
+    return np.concatenate([cpi, cA.ravel(), cB.ravel()])
+
+
+def fold_counts(
+    rows, n: int, m: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
+    """Sum the collected ``(loglik, counts)`` task rows back into
+    (count_pi, count_A, count_B, loglik) — the inverse of
+    :func:`encode_counts`, folded with one NumPy sum. No rows (an empty
+    corpus) folds to zero counts."""
+    size = n + n * n + n * m
+    total = np.sum([r.counts for r in rows], axis=0) if rows else np.zeros(size)
+    to_b = n + n * n
+    loglik = float(sum(r.loglik for r in rows))
+    return total[:n], total[n:to_b].reshape(n, n), total[to_b:].reshape(n, m), loglik
+
+
+def tidy_counts(blocks: DataFrame, n_hidden: int, n_observed: int) -> DataFrame:
+    """The summed count blocks as tidy ``(kind, i, j, weight)`` rows: one
+    Catalyst posexplode of the task blocks, summed per position, with each
+    position decoded back to its (kind, i, j) cell."""
+    n, m = n_hidden, n_observed
+    pos = F.col("pos")
+    to_b = n + n * n  # first emission position
+
+    def cell(base: int, width: int):
+        # row and column of a position inside the row-major block at base
+        return ((pos - base) / width).cast("int"), ((pos - base) % width).cast("int")
+
+    (ai, aj), (bi, bj) = cell(n, n), cell(to_b, m)
+    return (
+        blocks.select(F.posexplode("counts").alias("pos", "weight"))
+        .groupBy("pos")
+        .agg(F.sum("weight").alias("weight"))
+        .select(
+            F.when(pos < n, KIND_INITIAL)
+            .when(pos < to_b, KIND_TRANSITION)
+            .otherwise(KIND_EMISSION)
+            .alias("kind"),
+            F.when(pos < n, 0).when(pos < to_b, ai).otherwise(bi).alias("i"),
+            F.when(pos < n, pos).when(pos < to_b, aj).otherwise(bj).alias("j"),
+            "weight",
+        )
+    )
+
+
+def _obs_arrays(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(flat symbols, lengths) of one Arrow batch's ``obs`` list column.
+    ``flatten``/``value_lengths`` honour a sliced batch's offset (the raw
+    ``.values``/``.offsets`` buffers do not); a null array is length 0."""
+    flat = col.flatten()
+    if flat.null_count:
+        raise ValueError("obs arrays must not contain null elements")
+    return flat.to_numpy(), col.value_lengths().fill_null(0).to_numpy()
+
+
+def _finite_weights(col: pa.Array) -> np.ndarray:
+    """The batch's per-sequence weights; a null, NaN or infinite weight
+    would silently poison every count the task accumulates, so it raises."""
+    w = col.to_numpy(zero_copy_only=False)
+    if col.null_count or not np.isfinite(w).all():
+        raise ValueError(
+            "fit(weight_col=...): weights must be finite doubles — "
+            "found a null, NaN or infinite weight"
+        )
+    return w
 
 
 def e_step_udf(bc_model, weighted: bool = False):
-    """Build the mapInPandas function for one E-step pass.
+    """Build the mapInArrow function for one E-step pass.
 
-    One output block per Arrow batch: flattened expected-count rows
-    (kind, i, j, weight) plus a single (loglik, 0, 0, sum) row.
+    Each task runs every Arrow batch of its partition through the packed
+    kernel (kernel.e_step_counts_packed) into one set of accumulators, then
+    yields ONE row: its summed loglik and its :func:`encode_counts` block.
+    A task that saw no symbols yields nothing.
 
     ``weighted``: the input carries a ``weight`` column and every
     sequence's counts/loglik scale by it (deduplicated-corpus multiplicity
-    semantics — see kernel.e_step_counts_batch).
+    semantics — see kernel.e_step_counts_packed).
     """
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pi, A, B = bc_model.value
         n, m = A.shape[0], B.shape[1]
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
+        cpi, cA, cB = np.zeros(n), np.zeros((n, n)), np.zeros((n, m))
         ll = 0.0
         saw_data = False
-        for pdf in batches:
-            if weighted:
-                wts_in = pdf["weight"]
-                # Fail fast: a null weight survives cast("double") as NaN/None
-                # and would silently poison every accumulated count in the
-                # batch (NaN propagates through the += folds).
-                if wts_in.isna().any():
-                    raise ValueError(
-                        "fit(weight_col=...): null/NaN weight encountered — "
-                        "weights must be non-null finite doubles"
-                    )
-            else:
-                wts_in = [1.0] * len(pdf)
-            kept = [
-                (np.asarray(o, dtype=np.int64), float(wt))
-                for o, wt in zip(pdf["obs"], wts_in)
-                if o is not None and len(o) > 0
-            ]
-            if not kept:
+        for batch in batches:
+            flat, lens = _obs_arrays(batch.column("obs"))
+            weights = _finite_weights(batch.column("weight")) if weighted else None
+            if flat.size == 0:
                 continue
-            obs_list = [o for o, _ in kept]
             saw_data = True
-            # batched padded DP: Python loop is O(max_T) per Arrow batch,
-            # not O(sum T) — see kernel.e_step_counts_batch
-            ll += e_step_counts_batch(
-                pi, A, B, obs_list, cpi, cA, cB,
-                weights=np.array([wt for _, wt in kept]) if weighted else None,
-            )
+            ll += e_step_counts_packed(pi, A, B, flat, lens, cpi, cA, cB, weights)
         if not saw_data:
             return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
+        block = encode_counts(cpi, cA, cB)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([ll], pa.float64()),
+                pa.ListArray.from_arrays(pa.array([0, block.size], pa.int32()), block),
+            ],
+            names=["loglik", "counts"],
         )
 
     return compute
@@ -133,16 +177,17 @@ def e_step_udf(bc_model, weighted: bool = False):
 def expected_counts(
     sequences: DataFrame, bc_model, weight_col: str | None = None
 ) -> DataFrame:
-    """One E-step over the corpus -> aggregated count DataFrame
-    (kind, i, j, weight), including the loglik side-channel row."""
+    """One E-step over the corpus -> one ``(loglik, counts)`` row per task
+    (COUNT_BLOCK_SCHEMA): a narrow mapInArrow, no shuffle. Fold the
+    collected rows with :func:`fold_counts`, or sum them in Catalyst with
+    :func:`tidy_counts`."""
     if weight_col is None:
         inp = sequences.select("obs")
     else:
         inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
-    raw = inp.mapInPandas(
-        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA
+    return inp.mapInArrow(
+        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNT_BLOCK_SCHEMA
     )
-    return raw.groupBy("kind", "i", "j").agg(F.sum("weight").alias("weight"))
 
 
 GROUPED_COUNTS_SCHEMA = "group string, kind string, i int, j int, weight double"
@@ -296,8 +341,8 @@ def fit(
 ) -> FitResult:
     """Distributed EM loop (reference driver D2, BaumWelchDriver.java:114-134).
 
-    Per iteration: broadcast model -> E-step mapInPandas -> groupBy sum ->
-    collect tiny counts -> NumPy M-step -> convergence test. Optionally writes
+    Per iteration: broadcast model -> E-step mapInArrow -> collect one
+    count block per task -> NumPy fold and M-step -> convergence test. Optionally writes
     ``{model_out}/model-{it}`` parquet per iteration (reference S3/S4 sinks,
     BaumWelchUtils.java:147-226, BaumWelchDriver.java:128,178).
 
@@ -337,20 +382,7 @@ def fit(
                 rows = expected_counts(sequences, bc, weight_col=weight_col).collect()
             finally:
                 bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
+            cpi, cA, cB, ll = fold_counts(rows, model.n_hidden, model.n_observed)
             trace.append(ll)
             new_model = m_step(cpi, cA, cB)
             if topology_mask is not None:
@@ -445,7 +477,7 @@ def em_reestimate(
 ) -> DataFrame:
     """One distributed SOFT-EM re-estimation step as a tidy DataFrame
     (kind, i, j, prob): E-step expected counts (γ at t=0 for pi, Σ_t ξ for
-    A, Σ_t γ by symbol for B — kernel.e_step_counts_batch, reference
+    A, Σ_t γ by symbol for B — kernel.e_step_counts_packed, reference
     M4/M5/M6 stripes, BaumWelchMapper.java:157-240 with the §2.6 Q2/Q3/Q5
     corrections) under a FIXED ``model``, then the Catalyst window
     normalize (normalize_counts, reference reducer A4).
@@ -454,12 +486,12 @@ def em_reestimate(
     DuckDB-exact pin for the distributed E-step itself: the oracle
     (em_reestimate_oracle_sql) recomputes γ/ξ from the scaled
     forward/backward recursive CTEs and must land on the same 6-dp-rounded
-    probabilities — so the mapInPandas accumulation, the count shuffle, and
-    the window normalize are checked end-to-end, not just via the pytest
-    NumPy oracle. Probabilities are strictly positive here (γ > 0 for a
+    probabilities — so the mapInArrow accumulation, the count-block sum
+    (tidy_counts) and the window normalize are checked end-to-end, not
+    just via the pytest NumPy oracle. Probabilities are strictly positive here (γ > 0 for a
     dense random model), so plain round needs no signed-zero guard."""
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
-    counts = expected_counts(sequences, bc)
+    counts = tidy_counts(expected_counts(sequences, bc), model.n_hidden, model.n_observed)
     # weight > 0: the E-step UDF emits the DENSE N x (N+M) accumulator
     # including exactly-zero cells (a symbol absent from the corpus, or a
     # fully-underflowed state); the oracle's GROUP BYs only produce rows

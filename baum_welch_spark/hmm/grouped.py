@@ -4,8 +4,8 @@ reference dataflow (reference trains exactly one HMM; SURVEY §2.4 D2).
 
 Spark shape: ``applyInPandas`` over ``groupBy(group_col)`` — each group's
 sequences land in one task, which runs the NumPy batched EM
-(``kernel.batched_baum_welch`` — the same length-bucketed vectorized E-step
-the distributed fit's Arrow batches run, pinned against the per-sequence
+(``kernel.batched_baum_welch`` — the same packed vectorized E-step the
+distributed fit's Arrow batches run, pinned against the per-sequence
 ``sequential_baum_welch`` oracle in tests). This is the right tool when models are many and
 each group's data fits a task (the common per-domain case); the distributed
 ``fit`` remains the tool for one model over an unbounded corpus.
@@ -55,7 +55,7 @@ def fit_grouped(
         # fixed accumulation order: rows reach the task in partition-
         # dependent order, and float count-summation order would otherwise
         # leak ulp differences into the trained model (the batched kernel's
-        # length-bucketing is deterministic given this sorted order, so the
+        # stable length sort is deterministic given this sorted order, so the
         # result stays partitioning-invariant)
         pdf = pdf.sort_values("seq_id")
         seqs = [np.asarray(o, dtype=np.int64) for o in pdf["obs"]]

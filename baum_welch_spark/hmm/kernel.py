@@ -155,7 +155,7 @@ def batched_baum_welch(
 ) -> tuple[HMM, list[float]]:
     """EM to the same fixed point as :func:`sequential_baum_welch`, with the
     E-step vectorized ACROSS sequences (:func:`e_step_counts_batch` — the
-    same length-bucketed kernel the distributed fit's Arrow batches run).
+    same packed kernel the distributed fit's Arrow batches run).
     Identical quantities modulo float summation order; parity with the
     per-sequence loop is pinned in tests at the same tolerance class as the
     distributed-vs-sequential pin. This is the in-task trainer for
@@ -180,17 +180,148 @@ def batched_baum_welch(
 
 
 def _length_buckets(lens: list[int]) -> list[list[int]]:
-    """Octave length-bucketing for the batched E-step (VERDICT-r9 #5 /
-    SURVEY §7 hard part #1): indices grouped by bit_length(T), so within a
-    bucket max_T < 2·min_T and the padded DP cost Σ_b (maxT_b × S_b) is
-    bounded by 2 × Σ_s T_s REGARDLESS of length skew. Without this, one
-    pathological 10⁵-length sequence in an Arrow batch of 10³ short ones
-    pads EVERY sequence to 10⁵ — ~10³× the true work (and a (Tmax, S, N)
-    alpha array in the GBs)."""
+    """Octave length-bucketing for the padded batched list-Viterbi
+    (decode._viterbi_topk_batch; VERDICT-r9 #5 / SURVEY §7 hard part #1):
+    indices grouped by bit_length(T), so within a bucket max_T < 2·min_T
+    and the padded DP cost Σ_b (maxT_b × S_b) is bounded by 2 × Σ_s T_s
+    REGARDLESS of length skew. Without this, one pathological 10⁵-length
+    sequence in an Arrow batch of 10³ short ones pads EVERY sequence to
+    10⁵ — ~10³× the true work (and a (Tmax, S, N) DP array in the GBs).
+    The E-step needs no buckets: it runs packed (:func:`_packed_layout`)."""
     buckets: dict[int, list[int]] = {}
     for idx, t in enumerate(lens):
         buckets.setdefault(int(t).bit_length(), []).append(idx)
     return [buckets[k] for k in sorted(buckets)]
+
+
+#: rows per emission-count bincount: keeps its (rows x N) index cache-sized
+_BINCOUNT_ROWS = 8192
+
+
+def _packed_layout(lens: np.ndarray) -> tuple[np.ndarray, list[int]]:
+    """Time-major packing of a batch sorted by length, longest first.
+
+    Returns ``(order, starts)``: ``order[k]`` is the k-th longest sequence,
+    and step t of the DP holds the n_t = starts[t+1] - starts[t] sequences
+    longer than t — always the prefix ``order[:n_t]`` — at rows
+    ``starts[t]:starts[t+1]``. The DP therefore has exactly ΣT rows
+    (``starts[-1]``) and max(T) steps (``len(starts) - 1``) whatever the
+    length skew, with no padding; a zero-length sequence takes no row."""
+    order = np.argsort(-lens, kind="stable")
+    desc = lens[order]
+    t_max = int(desc[0]) if desc.size else 0
+    # n_t = #{s : T_s > t}; -desc is ascending, so a left searchsorted counts it
+    n_t = np.searchsorted(-desc, -np.arange(t_max), side="left")
+    return order, [0] + np.cumsum(n_t).tolist()
+
+
+def e_step_counts_packed(
+    pi: np.ndarray,
+    A: np.ndarray,
+    B: np.ndarray,
+    flat: np.ndarray,
+    lens: np.ndarray,
+    out_pi: np.ndarray,
+    out_A: np.ndarray,
+    out_B: np.ndarray,
+    weights: np.ndarray | None = None,
+) -> float:
+    """Batched E-step over packed sequences: ``flat`` holds the symbols of
+    every sequence back to back, ``lens`` their lengths (zero-length
+    sequences carry no information and are skipped). The expected counts
+    are those of looping :func:`e_step_counts` over the batch, accumulated
+    into (out_pi, out_A, out_B); the summed log-likelihood is returned.
+
+    One DP over the :func:`_packed_layout` rows: each Python-level loop
+    runs max(T) times, and alpha, w and gamma are the only (ΣT, N) arrays —
+    nothing is padded, so nothing is masked. Emissions are gathered once
+    through a contiguous ``B.T``; the backward pass computes
+    ``beta[t] = w[t+1] @ A.T`` from w (which overwrites the gathered
+    emissions in place) and folds ξ into an (N, N) sum as it goes, so no
+    transition-sized array exists; the emission counts are a bincount over
+    (symbol, state) cells. Equality with the per-sequence kernel is pinned
+    in tests (summation order only).
+
+    ``weights`` (optional, per sequence): every count contribution and the
+    log-likelihood of sequence s scale by weights[s] — the multiplicity
+    semantics for training on a DEDUPLICATED corpus where each kept
+    sequence represents `n_copies` originals (an integer weight w is
+    numerically equivalent to physically replicating the sequence w times,
+    asserted in tests; fractional weights give importance weighting).
+
+    Boundary contract: every symbol id is in [0, M). NumPy would read a
+    negative id from the end of ``B`` (so ``[0, 1, -1]`` silently scored as
+    ``[0, 1, M-1]``) and fail opaquely on an id >= M; both raise here.
+    """
+    flat = np.asarray(flat)
+    lens = np.asarray(lens, dtype=np.int64)
+    if flat.size == 0:
+        return 0.0
+    N, M = A.shape[0], B.shape[1]
+    lo_id, hi_id = int(flat.min()), int(flat.max())
+    if lo_id < 0 or hi_id >= M:
+        raise ValueError(
+            f"symbol ids must be in [0, M) with M={M}: got min={lo_id} max={hi_id}"
+        )
+    order, starts = _packed_layout(lens)
+    K, S, T = starts[-1], starts[1], len(starts) - 1
+    n_t = np.diff(starts)
+    rank = np.arange(K) - np.repeat(starts[:-1], n_t)  # (K,) each row's index into order
+    first = np.cumsum(lens) - lens  # offset of each sequence in flat
+    sym = flat[first[order][rank] + np.repeat(np.arange(T), n_t)]  # (K,)
+    w = np.ascontiguousarray(B.T)[sym]  # (K, N): emissions now, w after the backward pass
+
+    alpha = np.empty((K, N))
+    scale = np.empty(K)
+    for t in range(T):
+        lo, hi = starts[t], starts[t + 1]
+        a = alpha[lo:hi]
+        if t == 0:
+            np.multiply(pi, w[lo:hi], out=a)
+        else:
+            prev = starts[t - 1]
+            np.matmul(alpha[prev : prev + hi - lo], A, out=a)
+            a *= w[lo:hi]
+        s = a.sum(axis=1, out=scale[lo:hi])
+        a /= s[:, None]
+
+    # beta is built in gamma's buffer; w[t] = B[:, o_t] * beta[t] / scale[t].
+    # ξ summed over t: Σ_t alpha[t].T @ w[t+1], restricted to the sequences
+    # live at t+1 (a prefix of both steps), with A applied once at the end
+    seq_w = None if weights is None else np.asarray(weights, dtype=np.float64)[order]
+    gamma = np.empty((K, N))
+    xi = np.zeros((N, N))
+    for t in range(T - 1, -1, -1):
+        lo, hi = starts[t], starts[t + 1]
+        b = gamma[lo:hi]
+        n_next = starts[t + 2] - hi if t + 1 < T else 0
+        if n_next:
+            w_next = w[hi : hi + n_next]
+            np.matmul(w_next, A.T, out=b[:n_next])
+            a = alpha[lo : lo + n_next]
+            xi += (a if seq_w is None else a * seq_w[:n_next, None]).T @ w_next
+        b[n_next:] = 1.0  # the sequences that end at t
+        wt = w[lo:hi]
+        wt *= b
+        wt /= scale[lo:hi, None]
+    out_A += A * xi
+    gamma *= alpha  # gamma = alpha * beta; every row sums to 1
+
+    logs = np.log(scale)
+    if seq_w is not None:
+        row_w = seq_w[rank]  # (K,)
+        gamma *= row_w[:, None]
+    out_pi += gamma[:S].sum(axis=0)
+    # emission counts: one bincount over (symbol, state) cells per row chunk,
+    # reading gamma in memory order (a per-state column bincount strides
+    # through all of gamma N times)
+    counts = np.zeros(M * N)
+    cells = np.arange(N)
+    for c in range(0, K, _BINCOUNT_ROWS):
+        ids = sym[c : c + _BINCOUNT_ROWS, None] * N + cells
+        counts += np.bincount(ids.ravel(), gamma[c : c + _BINCOUNT_ROWS].ravel(), M * N)
+    out_B += counts.reshape(M, N).T
+    return float(logs.sum() if weights is None else logs @ row_w)
 
 
 def e_step_counts_batch(
@@ -203,124 +334,12 @@ def e_step_counts_batch(
     out_B: np.ndarray,
     weights: np.ndarray | None = None,
 ) -> float:
-    """Length-skew-hardened batched E-step: sequences are octave-bucketed
-    by length (:func:`_length_buckets`) and each bucket runs through the
-    vectorized core, so padding waste is bounded at 2× the true DP work no
-    matter how skewed an Arrow batch's length distribution is. Counts
-    accumulate into the same out arrays; the summed loglik is returned.
-    Equality with the per-sequence kernel is pinned by the same batch
-    tests (bucket boundaries only change float accumulation ORDER, which
-    the existing 1e-10 pins already absorb)."""
+    """:func:`e_step_counts_packed` over a list of sequences: the same
+    expected counts as looping :func:`e_step_counts` over ``obs_list``
+    (``weights`` aligned with it), with the Python-level loop running
+    max(T) times instead of ΣT times. Returns the summed log-likelihood."""
     if len(obs_list) == 0:
         return 0.0
-    groups = _length_buckets([len(o) for o in obs_list])
-    if len(groups) == 1:
-        return _e_step_counts_batch_core(
-            pi, A, B, obs_list, out_pi, out_A, out_B, weights
-        )
-    warr = None if weights is None else np.asarray(weights, dtype=np.float64)
-    total = 0.0
-    for idxs in groups:
-        total += _e_step_counts_batch_core(
-            pi, A, B,
-            [obs_list[i] for i in idxs],
-            out_pi, out_A, out_B,
-            None if warr is None else warr[idxs],
-        )
-    return total
-
-
-def _e_step_counts_batch_core(
-    pi: np.ndarray,
-    A: np.ndarray,
-    B: np.ndarray,
-    obs_list: list[np.ndarray],
-    out_pi: np.ndarray,
-    out_A: np.ndarray,
-    out_B: np.ndarray,
-    weights: np.ndarray | None = None,
-) -> float:
-    """Batched E-step: the same expected counts as looping e_step_counts over
-    obs_list, but vectorized ACROSS sequences (padded to the batch max
-    length) so the Python-level loop runs max_T times, not sum(T_s) times.
-    This is the hot kernel inside the distributed fit's Arrow batches
-    (entered via the length-bucketing wrapper e_step_counts_batch).
-
-    Padding semantics: for t beyond a sequence's end, scale is pinned to 1
-    (no loglik contribution), alpha is carried forward unchanged, and beta's
-    don't-care region is 1 (which also seeds beta[len-1] = 1 exactly);
-    gamma/xi contributions are masked by validity, so the result matches the
-    per-sequence kernel to machine precision (asserted in tests).
-
-    ``weights`` (optional, per sequence): every count contribution and the
-    log-likelihood of sequence s scale by weights[s] — the multiplicity
-    semantics for training on a DEDUPLICATED corpus where each kept
-    sequence represents `n_copies` originals (an integer weight w is
-    numerically equivalent to physically replicating the sequence w times,
-    asserted in tests; fractional weights give importance weighting). The
-    weights=None path is byte-identical to the unweighted kernel.
-
-    Returns the (weighted) summed log-likelihood of the batch.
-    """
-    S = len(obs_list)
-    if S == 0:
-        return 0.0
-    N, M = A.shape[0], B.shape[1]
     lens = np.array([len(o) for o in obs_list], dtype=np.int64)
-    Tmax = int(lens.max())
-    obs_pad = np.zeros((Tmax, S), dtype=np.int64)
-    for s_i, o in enumerate(obs_list):
-        obs_pad[: len(o), s_i] = o
-    valid = np.arange(Tmax)[:, None] < lens[None, :]  # (T, S)
-
-    alpha = np.empty((Tmax, S, N))
-    scale = np.ones((Tmax, S))
-    a = pi[None, :] * B[:, obs_pad[0]].T  # (S, N); every sequence has T >= 1
-    sc = a.sum(axis=1)
-    alpha[0] = a / sc[:, None]
-    scale[0] = sc
-    for t in range(1, Tmax):
-        a = (alpha[t - 1] @ A) * B[:, obs_pad[t]].T
-        v = valid[t]
-        sc = np.where(v, a.sum(axis=1), 1.0)
-        alpha[t] = np.where(v[:, None], a / sc[:, None], alpha[t - 1])
-        scale[t] = sc
-
-    beta = np.empty((Tmax, S, N))
-    beta[Tmax - 1] = 1.0
-    w = np.empty((Tmax, S, N))  # w[t] = B[:,o_t] * beta[t] / scale[t]
-    w[Tmax - 1] = (B[:, obs_pad[Tmax - 1]].T * beta[Tmax - 1]) / scale[Tmax - 1][:, None]
-    for t in range(Tmax - 2, -1, -1):
-        bt = (B[:, obs_pad[t + 1]].T * beta[t + 1]) @ A.T / scale[t + 1][:, None]
-        # invalid t+1 (t >= len-1): beta[t] = 1 — exact for t == len-1,
-        # don't-care (masked) beyond
-        beta[t] = np.where(valid[t + 1][:, None], bt, 1.0)
-        w[t] = (B[:, obs_pad[t]].T * beta[t]) / scale[t][:, None]
-
-    gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
-    if weights is None:
-        out_pi += gamma[0].sum(axis=0)
-    else:
-        wgt = np.asarray(weights, dtype=np.float64)
-        grid = np.broadcast_to(wgt[None, :], (Tmax, S))
-        out_pi += wgt @ gamma[0]  # (S,) @ (S, N)
-
-    flat_obs = obs_pad[valid]          # (K,)
-    flat_gamma = gamma[valid]          # (K, N)
-    if weights is not None:
-        flat_gamma = flat_gamma * grid[valid][:, None]
-    BT = np.zeros((M, N))
-    np.add.at(BT, flat_obs, flat_gamma)
-    out_B += BT.T
-
-    if Tmax > 1:
-        trans_valid = valid[1:]        # transition t -> t+1 exists iff valid[t+1]
-        wa = alpha[:-1][trans_valid]   # (K2, N)
-        wb = w[1:][trans_valid]        # (K2, N)
-        if weights is not None:
-            wb = wb * grid[1:][trans_valid][:, None]
-        out_A += A * (wa.T @ wb)
-
-    if weights is None:
-        return float(np.log(scale).sum())
-    return float(np.log(scale).sum(axis=0) @ wgt)
+    flat = np.concatenate([np.asarray(o, dtype=np.int64) for o in obs_list])
+    return e_step_counts_packed(pi, A, B, flat, lens, out_pi, out_A, out_B, weights)

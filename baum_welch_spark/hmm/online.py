@@ -5,9 +5,10 @@ Cappe & Moulines 2009, "On-line expectation-maximization algorithm for
 latent data models", and Liang & Klein 2009's stepwise-EM formulation).
 
 Per micro-batch t the SAME distributed E-step the batch loop uses
-(``fit.expected_counts`` — mapInPandas with in-UDF combine, model
-broadcast) produces the batch's expected counts; the running sufficient
-statistics then take a stepwise-decaying interpolation
+(``fit.expected_counts`` — mapInArrow, one count-block row per task, model
+broadcast, folded by ``fit.fold_counts``) produces the batch's expected
+counts; the running sufficient statistics then take a stepwise-decaying
+interpolation
 
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
@@ -32,17 +33,9 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.fit import (
-    KIND_LOGLIK,
-    expected_counts,
-)
+from baum_welch_spark.hmm.fit import expected_counts, fold_counts
 from baum_welch_spark.hmm.kernel import m_step
-from baum_welch_spark.hmm.model import (
-    HMM,
-    KIND_EMISSION,
-    KIND_INITIAL,
-    KIND_TRANSITION,
-)
+from baum_welch_spark.hmm.model import HMM
 
 
 @dataclass
@@ -66,19 +59,7 @@ class OnlineEM:
             rows = expected_counts(batch, bc).collect()
         finally:
             bc.unpersist()
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
-        ll = 0.0
-        for r in rows:
-            if r.kind == KIND_LOGLIK:
-                ll += r.weight
-            elif r.kind == KIND_INITIAL:
-                cpi[r.j] += r.weight
-            elif r.kind == KIND_TRANSITION:
-                cA[r.i, r.j] += r.weight
-            elif r.kind == KIND_EMISSION:
-                cB[r.i, r.j] += r.weight
+        cpi, cA, cB, ll = fold_counts(rows, n, m)
         n_seqs = float(cpi.sum())  # every sequence contributes exactly 1 to pi
         if n_seqs == 0:
             return self.model  # empty micro-batch: state unchanged

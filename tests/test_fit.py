@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm import HMM, sequential_baum_welch
-from baum_welch_spark.hmm.fit import fit, expected_counts, normalize_counts
+from baum_welch_spark.hmm.fit import fit, expected_counts, normalize_counts, tidy_counts
 from baum_welch_spark.operators.sequences import build_sequences, symbol_dict
 from baum_welch_spark.sources.io import load_table
 
@@ -78,7 +78,9 @@ def test_normalize_counts_window(spark, sequences_df):
     """The window-normalize path (A4 as Catalyst, the oracle-checked form)."""
     init = HMM.random(N_HIDDEN, N_OBSERVED, seed=1)
     bc = spark.sparkContext.broadcast((init.pi, init.A, init.B))
-    model_df = normalize_counts(expected_counts(sequences_df, bc)).collect()
+    model_df = normalize_counts(
+        tidy_counts(expected_counts(sequences_df, bc), N_HIDDEN, N_OBSERVED)
+    ).collect()
     bc.unpersist()
     m = HMM.from_rows([(r.kind, r.i, r.j, r.prob) for r in model_df])
     m.validate()  # rows sum to 1 within each (kind, i)
@@ -327,3 +329,88 @@ def test_em_trace_one_iter_is_em_reestimate_and_rejects_zero(spark, sequences_df
     assert one == step
     with pytest.raises(ValueError):
         em_trace(spark, sequences_df, model, n_iters=0)
+
+
+# -- the Arrow E-step: batch slicing, empty input and the boundary contract --
+
+
+def test_arrow_e_step_sliced_batches_nulls_and_empty_partition(spark):
+    """Several small Arrow batches per task, null and empty obs rows, T=1
+    sequences, and a partition holding only empty rows (it emits no block):
+    fit must still equal the sequential oracle."""
+    from baum_welch_spark.hmm.fit import _obs_arrays
+
+    rng = np.random.default_rng(31)
+    obs = []
+    for k in range(18):
+        if k % 5 == 0:
+            obs.append(None)
+        elif k % 5 == 1:
+            obs.append([])
+        elif k % 5 == 2:
+            obs.append([int(rng.integers(0, N_OBSERVED))])
+        else:
+            obs.append(rng.integers(0, N_OBSERVED, size=int(rng.integers(2, 40))).tolist())
+    obs += [None, [], [], None, [], []]  # the fourth partition: nothing to count
+    rows = [(k, o) for k, o in enumerate(obs)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "seq_id long, obs array<int>"
+    )
+    init = HMM.random(N_HIDDEN, N_OBSERVED, seed=17)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        bc = spark.sparkContext.broadcast((init.pi, init.A, init.B))
+        blocks = expected_counts(df, bc).collect()
+        bc.unpersist()
+        got = fit(spark, df, init, max_iter=3)
+    finally:
+        spark.conf.set(key, old)
+    assert len(blocks) == 3
+    seqs = [np.array(o, dtype=np.int64) for o in obs if o]
+    expected, expected_trace = sequential_baum_welch(init, seqs, max_iter=3)
+    np.testing.assert_allclose(got.model.pi, expected.pi, atol=1e-8)
+    np.testing.assert_allclose(got.model.A, expected.A, atol=1e-8)
+    np.testing.assert_allclose(got.model.B, expected.B, atol=1e-8)
+    np.testing.assert_allclose(got.loglik_trace, expected_trace, rtol=1e-10)
+
+    # a sliced list column: values and lengths must follow the slice
+    import pyarrow as pa
+
+    col = pa.array([[9, 9], [1, 2, 3], None, [], [4]], pa.list_(pa.int32())).slice(1, 4)
+    flat, lens = _obs_arrays(col)
+    assert flat.tolist() == [1, 2, 3, 4]
+    assert lens.tolist() == [3, 0, 0, 1]
+
+
+def _contract_df(spark, obs, weights=None):
+    rows = [(k, o, 1.0 if weights is None else weights[k]) for k, o in enumerate(obs)]
+    return spark.createDataFrame(rows, "seq_id long, obs array<int>, w double")
+
+
+def test_fit_rejects_negative_symbol_ids(spark):
+    """[0, 1, -1] used to score like [0, 1, M-1]: NumPy reads -1 from the
+    end of B. It must be an error."""
+    df = _contract_df(spark, [[0, 1, -1], [2, 3]])
+    with pytest.raises(Exception, match=r"symbol ids must be in \[0, M\)"):
+        fit(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1)
+
+
+def test_fit_rejects_symbol_ids_at_or_above_m(spark):
+    df = _contract_df(spark, [[0, 1], [2, N_OBSERVED]])
+    with pytest.raises(Exception, match=r"symbol ids must be in \[0, M\)"):
+        fit(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1)
+
+
+def test_fit_rejects_null_symbol_inside_obs(spark):
+    df = _contract_df(spark, [[0, None, 1], [2, 3]])
+    with pytest.raises(Exception, match="obs arrays must not contain null elements"):
+        fit(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1)
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf")])
+def test_fit_rejects_infinite_weights(spark, bad):
+    df = _contract_df(spark, [[0, 1], [2, 3]], weights=[1.0, bad])
+    with pytest.raises(Exception, match="weights must be finite"):
+        fit(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1, weight_col="w")

@@ -226,3 +226,54 @@ def test_batch_e_step_length_skew_weighted_matches():
     np.testing.assert_allclose(p1, p2, atol=1e-10)
     np.testing.assert_allclose(A1, A2, rtol=1e-9, atol=1e-10)
     np.testing.assert_allclose(B1, B2, rtol=1e-9, atol=1e-10)
+
+
+def test_packed_e_step_has_sum_t_rows_and_max_t_steps(monkeypatch):
+    """The packed DP on the 10⁵-length-outlier corpus: exactly ΣT rows
+    (no padding at all) and max(T) steps, with the counts still equal to
+    the per-sequence kernel's."""
+    from baum_welch_spark.hmm import kernel
+
+    rng = np.random.default_rng(23)
+    short = [rng.integers(0, 5, size=int(rng.integers(4, 17))) for _ in range(1000)]
+    seqs = short + [rng.integers(0, 5, size=100_000)]
+    lens = [len(o) for o in seqs]
+
+    layouts = []
+    real = kernel._packed_layout
+
+    def spy(lens_arr):
+        out = real(lens_arr)
+        layouts.append(out)
+        return out
+
+    monkeypatch.setattr(kernel, "_packed_layout", spy)
+    m = HMM.random(3, 5, seed=23)
+    p2 = np.zeros(3); A2 = np.zeros((3, 3)); B2 = np.zeros((3, 5))
+    ll2 = kernel.e_step_counts_batch(m.pi, m.A, m.B, seqs, p2, A2, B2)
+
+    assert len(layouts) == 1
+    order, starts = layouts[0]
+    assert starts[-1] == sum(lens)  # rows of alpha, w and gamma
+    assert len(starts) - 1 == max(lens)  # steps of each DP loop
+    assert sorted(order.tolist()) == list(range(len(seqs)))
+    step_sizes = np.diff(starts)
+    assert step_sizes[0] == len(seqs) and np.all(np.diff(step_sizes) <= 0)
+
+    p1 = np.zeros(3); A1 = np.zeros((3, 3)); B1 = np.zeros((3, 5))
+    ll1 = sum(e_step_counts(m.pi, m.A, m.B, o, p1, A1, B1) for o in seqs)
+    assert np.isclose(ll1, ll2, rtol=1e-10)
+    np.testing.assert_allclose(A1, A2, atol=1e-10)
+    np.testing.assert_allclose(B1, B2, rtol=1e-9, atol=1e-10)
+
+
+def test_batch_e_step_rejects_out_of_range_symbols():
+    """Symbol ids outside [0, M) are an error, not an alias: [0, 1, -1]
+    used to give the same counts and loglik as [0, 1, M-1]."""
+    from baum_welch_spark.hmm.kernel import e_step_counts_batch
+
+    m = MODEL_TINY
+    for bad in ([0, 1, -1], [0, 2]):
+        acc = [np.zeros(2), np.zeros((2, 2)), np.zeros((2, 2))]
+        with pytest.raises(ValueError, match=r"symbol ids must be in \[0, M\)"):
+            e_step_counts_batch(m.pi, m.A, m.B, [np.array([1, 0]), np.array(bad)], *acc)

@@ -234,35 +234,32 @@ def test_driver_window_stays_oracle_dense():
     assert len(qs) == len(set(qs))
     assert set(osql) <= set(qs), sorted(set(osql) - set(qs))
     rows_only_in_window = [q for q in qs[:50] if q not in osql]
-    # r13 window (VERDICT-r12 #1 rotation): the window carries this round's
-    # graduations + changed faces plus 34 r8/r9-vintage exact rotation
-    # targets; only three rows-only faces remain in it, each with its own
-    # non-SQL oracle:
+    # the window carries each round's changed faces plus exact rotation
+    # targets; a rows-only face is allowed in it only with its own non-SQL
+    # oracle:
     assert set(rows_only_in_window) <= {
-        # iterative Gaussian EM fit: 1e-8 sequential-NumPy parity pytest;
-        # its chaining and loglik evidence are driver-exact via the
-        # ghmm_em_trace / ghmm_loglik_trace faces. In-window for r15: its
-        # sequence build is now materialized once across EM laps.
-        "ghmm_fit",
-        # per-iteration TOTAL loglik trace: corpus-order float summation
-        # has no cross-engine pin (see ghmm_loglik_trace, its per-sequence
-        # driver-exact graduation); monotonicity asserted in-face. Same
-        # r15 sequence-materialization change as ghmm_fit.
-        "ghmm_trace",
-        # r15 OPTIMIZATION rotation (manifest rule: changed faces must be
-        # in-window the round they change): the IVF-PQ serving family —
-        # ivfpq_read_index now loads the model tables via pyarrow and
-        # ivfpq_write_index shares one persisted normalized frame between
-        # training and encode (identical doubles; pytest pins recall vs
-        # knn_brute, the pruned-scan plan shape, and byte-identical
-        # appends). Rows-only by nature (k-means + residual-PQ training).
-        # r14's rotated trainer block (hmm_fit_grouped/grouped_decode/
-        # hmm_select/hmm_fit_restarts) and asset_neardup rotated OUT,
-        # code-unchanged with r14 driver evidence — the window is DENSER
-        # in exact faces than r14's (5 rows-only vs 7).
-        "knn_ivfpq",
-        "knn_ivfpq_query",
-        "ivfpq_append",
+        # Arrow-native E-step rotation (manifest rule: changed faces must be
+        # in-window the round they change): the single-model E-step became
+        # mapInArrow + one count-block row per task, and every batched
+        # E-step caller now runs the packed kernel, so each EM trainer face
+        # changed source. Rows-only by nature (iterative trainers), each
+        # pinned by a non-SQL oracle: 1e-8 parity with the sequential NumPy
+        # EM (hmm_fit, hmm_fit_bakis, the grouped trainers, semisup), the
+        # best-of-restarts and selection invariants (hmm_fit_restarts,
+        # hmm_select), the stepwise-EM loglik bar (hmm_online); the E-step
+        # itself stays driver-exact via em_reestimate/em_trace in-window.
+        # The rows-only r15 residents (ghmm_fit, ghmm_trace, the IVF-PQ
+        # serving family) rotated OUT first, code-unchanged with r15 driver
+        # evidence, so the window gives up as few exact faces as possible.
+        "hmm_fit",
+        "hmm_fit_bakis",
+        "hmm_fit_restarts",
+        "hmm_select",
+        "hmm_online",
+        "hmm_fit_grouped",
+        "grouped_decode",
+        "hmm_fit_grouped_dist",
+        "hmm_fit_semisup",
     }, rows_only_in_window
 
 

@@ -43,7 +43,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from baum_welch_spark.session import default_cpus
+
+    cpus = str(default_cpus())
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)

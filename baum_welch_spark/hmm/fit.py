@@ -1,56 +1,63 @@
-"""Distributed Baum-Welch EM on Spark DataFrames.
+"""Distributed Baum-Welch EM on Spark DataFrames — the one EM engine every
+HMM trainer runs.
 
 The reference's dataflow (one Hadoop MR job per EM iteration,
 BaumWelchDriver.java:114-184) re-expressed Spark-first:
 
   E-step  (reference mapper M2-M6, BaumWelchMapper.java:143-258)
-      -> mapInArrow over the cached ``sequences`` DataFrame. Each Arrow
-         batch's ``obs`` list column enters the packed NumPy kernel as flat
-         symbols plus lengths (kernel.e_step_counts_packed); every batch of
-         a task accumulates into the same local arrays, and the task emits
-         ONE row: its loglik and its count block [pi | A | B] as one
-         array<double>. This is the map-side combine the reference wrote
-         but disabled (BaumWelchCombiner.java, off at
-         BaumWelchDriver.java:171), taken to one record per task. The
+      -> one mapInArrow shell (count_block_udf) over the cached
+         ``sequences`` DataFrame. Each Arrow batch's ``obs`` list column
+         enters the trainer's accumulate step as flat values plus lengths
+         (for the soft E-step, the packed kernel
+         kernel.e_step_counts_packed); every batch of a task accumulates
+         into the same local arrays, and the task emits ONE row: its loglik
+         and its count block as one array<double>. This is the map-side
+         combine the reference wrote but disabled (BaumWelchCombiner.java,
+         off at BaumWelchDriver.java:171), taken to one record per task. The
          reference shuffles O(S*T*(2N+1)) stripe records (its T-fold
          duplicate-emission bug included, SURVEY §2.6 Q1).
 
+  count codec
+      -> a block is the layout's arrays raveled back to back: [pi | A | B]
+         for the discrete family (hmm_layout), [pi | A | moments] for the
+         Gaussian one. encode_counts writes a block, fold_counts sums the
+         collected blocks and splits them back, tidy_counts turns them into
+         the (kind, i, j, weight) rows the DuckDB-checked faces normalize.
+
   reduce + M-step  (reference A1-A4, BaumWelchReducer.java:49-149)
       -> no shuffle: the driver collects one block per task and folds them
-         with one NumPy sum (fold_counts), then normalizes (kernel.m_step).
-         The DuckDB-checked faces get the tidy (kind, i, j, weight) rows
-         from a Catalyst posexplode + groupBy(pos) of the same blocks
-         (tidy_counts) and normalize them with a window (normalize_counts).
+         with one NumPy sum (fold_counts), then runs the trainer's M-step.
 
   model distribution  (reference: every map task re-reads the model from
       HDFS, BaumWelchMapper.java:54-117)
-      -> one sc.broadcast of the (pi, A, B) NumPy triple per iteration.
+      -> one sc.broadcast of the model per iteration (collect_counts).
 
   convergence  (reference D4: two full model re-scans + Frobenius test,
       BaumWelchDriver.java:196-207)
-      -> driver-side NumPy on the already-collected tiny model.
+      -> driver-side NumPy on the already-collected tiny model (em_loop).
 
 Scale posture: the only per-iteration action is one single-stage job over
 the cached sequences (scan stays resident via persist) whose result is one
-N + N^2 + N*M block per task. Nothing data-sized ever reaches the driver;
-what does is tasks x block, so a wide model over very many partitions wants
-a coalesced corpus (or a tree reduce, not built here).
+block per task. Nothing data-sized ever reaches the driver; what does is
+tasks x block, so a wide model over very many partitions wants a
+coalesced corpus (or a tree reduce, not built here).
 """
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from baum_welch_spark.hmm.kernel import e_step_counts_batch, e_step_counts_packed, m_step
+from baum_welch_spark.hmm.kernel import check_symbol_ids, e_step_counts_packed, m_step
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -58,68 +65,144 @@ from baum_welch_spark.hmm.model import (
     KIND_TRANSITION,
 )
 
-COUNTS_SCHEMA = "kind string, i int, j int, weight double"
-KIND_LOGLIK = "loglik"  # side-channel row: per-batch partial log-likelihood
 #: one row per E-step task: its summed loglik and its encode_counts block
 COUNT_BLOCK_SCHEMA = "loglik double, counts array<double>"
+#: the grouped E-step's rows: one block per (task, group)
+GROUPED_COUNT_BLOCK_SCHEMA = "group string, " + COUNT_BLOCK_SCHEMA
+
+#: a count layout: the (kind, shape) of each array of a block, in order
+Layout = tuple[tuple[str, tuple[int, ...]], ...]
 
 
-def encode_counts(cpi: np.ndarray, cA: np.ndarray, cB: np.ndarray) -> np.ndarray:
-    """The count block of one E-step task: ``[pi | A.ravel() | B.ravel()]``."""
-    return np.concatenate([cpi, cA.ravel(), cB.ravel()])
+def hmm_layout(model: HMM) -> Layout:
+    """The discrete family's count layout: ``[pi | A | B]``."""
+    n, m = model.n_hidden, model.n_observed
+    return ((KIND_INITIAL, (n,)), (KIND_TRANSITION, (n, n)), (KIND_EMISSION, (n, m)))
 
 
-def fold_counts(
-    rows, n: int, m: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
-    """Sum the collected ``(loglik, counts)`` task rows back into
-    (count_pi, count_A, count_B, loglik) — the inverse of
-    :func:`encode_counts`, folded with one NumPy sum. No rows (an empty
-    corpus) folds to zero counts."""
-    size = n + n * n + n * m
-    total = np.sum([r.counts for r in rows], axis=0) if rows else np.zeros(size)
-    to_b = n + n * n
+def encode_counts(*arrays: np.ndarray) -> np.ndarray:
+    """The count block of one E-step task: its arrays raveled back to back."""
+    return np.concatenate([np.ravel(a) for a in arrays])
+
+
+def fold_counts(rows, layout: Layout) -> tuple:
+    """Sum the collected ``(loglik, counts)`` rows back into the layout's
+    arrays — the inverse of :func:`encode_counts`, folded with one NumPy
+    sum. Returns ``(*arrays, loglik)``; no rows (an empty corpus) folds to
+    zero counts."""
+    shapes = [shape for _, shape in layout]
+    sizes = [int(np.prod(shape)) for shape in shapes]
+    total = np.sum([r.counts for r in rows], axis=0) if rows else np.zeros(sum(sizes))
+    parts = np.split(total, np.cumsum(sizes)[:-1])
     loglik = float(sum(r.loglik for r in rows))
-    return total[:n], total[n:to_b].reshape(n, n), total[to_b:].reshape(n, m), loglik
+    return (*(p.reshape(shape) for p, shape in zip(parts, shapes)), loglik)
 
 
-def tidy_counts(blocks: DataFrame, n_hidden: int, n_observed: int) -> DataFrame:
+def tidy_counts(blocks: DataFrame, layout: Layout) -> DataFrame:
     """The summed count blocks as tidy ``(kind, i, j, weight)`` rows: one
     Catalyst posexplode of the task blocks, summed per position, with each
-    position decoded back to its (kind, i, j) cell."""
-    n, m = n_hidden, n_observed
+    position decoded back to its (kind, i, j) cell along ``layout`` (a
+    vector is row 0). Key columns beside ``(loglik, counts)`` — the grouped
+    E-step's ``group`` — lead the output and key the sum."""
+    keys = [c for c in blocks.columns if c not in ("loglik", "counts")]
     pos = F.col("pos")
-    to_b = n + n * n  # first emission position
-
-    def cell(base: int, width: int):
-        # row and column of a position inside the row-major block at base
-        return ((pos - base) / width).cast("int"), ((pos - base) % width).cast("int")
-
-    (ai, aj), (bi, bj) = cell(n, n), cell(to_b, m)
+    kind = i = j = F  # F.when opens each CASE chain, Column.when extends it
+    base = 0
+    for name, shape in layout:
+        size, width = int(np.prod(shape)), shape[-1]
+        inside = pos < base + size
+        # row and column of a position inside the row-major array at base
+        row, col = ((pos - base) / width).cast("int"), ((pos - base) % width).cast("int")
+        kind, i, j = kind.when(inside, name), i.when(inside, row), j.when(inside, col)
+        base += size
     return (
-        blocks.select(F.posexplode("counts").alias("pos", "weight"))
-        .groupBy("pos")
+        blocks.select(*keys, F.posexplode("counts").alias("pos", "weight"))
+        .groupBy(*keys, "pos")
         .agg(F.sum("weight").alias("weight"))
-        .select(
-            F.when(pos < n, KIND_INITIAL)
-            .when(pos < to_b, KIND_TRANSITION)
-            .otherwise(KIND_EMISSION)
-            .alias("kind"),
-            F.when(pos < n, 0).when(pos < to_b, ai).otherwise(bi).alias("i"),
-            F.when(pos < n, pos).when(pos < to_b, aj).otherwise(bj).alias("j"),
-            "weight",
-        )
+        .select(*keys, kind.alias("kind"), i.alias("i"), j.alias("j"), "weight")
     )
 
 
-def _obs_arrays(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat symbols, lengths) of one Arrow batch's ``obs`` list column.
+def _obs_arrays(col: pa.Array, n_symbols: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """(flat values, lengths) of one Arrow batch's ``obs`` list column.
     ``flatten``/``value_lengths`` honour a sliced batch's offset (the raw
-    ``.values``/``.offsets`` buffers do not); a null array is length 0."""
+    ``.values``/``.offsets`` buffers do not); a null array is length 0.
+    ``n_symbols``: the discrete alphabet size M — ids outside [0, M) raise
+    (kernel.check_symbol_ids)."""
     flat = col.flatten()
     if flat.null_count:
         raise ValueError("obs arrays must not contain null elements")
-    return flat.to_numpy(), col.value_lengths().fill_null(0).to_numpy()
+    flat = flat.to_numpy()
+    if n_symbols is not None:
+        check_symbol_ids(flat, n_symbols)
+    return flat, col.value_lengths().fill_null(0).to_numpy()
+
+
+def split_sequences(flat: np.ndarray, lens: np.ndarray) -> list[np.ndarray]:
+    """The non-empty sequences of a packed batch, as views of ``flat``."""
+    return [s for s in np.split(flat, np.cumsum(lens)[:-1]) if s.size]
+
+
+def _group_parts(batch: pa.RecordBatch) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """(group, rows of that group) for each non-null group of a batch."""
+    col = batch.column("group")
+    for g in pc.unique(col).to_pylist():
+        if g is not None:
+            yield g, batch.filter(pc.equal(col, g))
+
+
+def count_block_udf(bc_model, layout: Callable[..., Layout], accumulate):
+    """Build the mapInArrow function of one E-step pass — the one shell
+    every trainer's E-step runs in.
+
+    Each task runs every Arrow batch of its partition through
+    ``accumulate(model, batch, flat, lens, *arrays) -> loglik`` (the
+    trainer's per-batch step: packed kernel, Viterbi path counts, labeled/
+    unlabeled split, Gaussian moments) into one set of ``layout(model)``
+    arrays, then yields ONE row: its summed loglik and its
+    :func:`encode_counts` block. A task that saw no observations yields
+    nothing. A discrete model's observations must be symbol ids in [0, M),
+    checked once per batch.
+
+    ``bc_model.value`` is the model, or ``{group: model}`` for the grouped
+    E-step over (group, obs) rows, with an optional ``None`` key as the
+    default for every group (the one-step re-estimate case). Each (task,
+    group) then yields its own row, keyed by group; a group with no model
+    is skipped — that is how a driver loop freezes converged groups
+    without repartitioning the corpus.
+    """
+
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        value = bc_model.value
+        grouped = isinstance(value, dict)
+        accs: dict = {}  # group (None when ungrouped) -> [loglik, *arrays]
+        for batch in batches:
+            for key, part in _group_parts(batch) if grouped else ((None, batch),):
+                model = value.get(key, value.get(None)) if grouped else value
+                if model is None:
+                    continue
+                n_symbols = model.n_observed if isinstance(model, HMM) else None
+                flat, lens = _obs_arrays(part.column("obs"), n_symbols)
+                if flat.size == 0:
+                    continue
+                acc = accs.get(key)
+                if acc is None:
+                    acc = accs[key] = [0.0] + [np.zeros(shape) for _, shape in layout(model)]
+                acc[0] += accumulate(model, part, flat, lens, *acc[1:])
+        if not accs:
+            return
+        blocks = [encode_counts(*acc[1:]) for acc in accs.values()]
+        offsets = np.cumsum([0] + [b.size for b in blocks])
+        cols = [
+            pa.array([acc[0] for acc in accs.values()], pa.float64()),
+            pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), np.concatenate(blocks)),
+        ]
+        names = ["loglik", "counts"]
+        if grouped:
+            cols, names = [pa.array(list(accs), pa.string())] + cols, ["group"] + names
+        yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return compute
 
 
 def _finite_weights(col: pa.Array) -> np.ndarray:
@@ -134,145 +217,38 @@ def _finite_weights(col: pa.Array) -> np.ndarray:
     return w
 
 
-def e_step_udf(bc_model, weighted: bool = False):
-    """Build the mapInArrow function for one E-step pass.
-
-    Each task runs every Arrow batch of its partition through the packed
-    kernel (kernel.e_step_counts_packed) into one set of accumulators, then
-    yields ONE row: its summed loglik and its :func:`encode_counts` block.
-    A task that saw no symbols yields nothing.
-
-    ``weighted``: the input carries a ``weight`` column and every
-    sequence's counts/loglik scale by it (deduplicated-corpus multiplicity
-    semantics — see kernel.e_step_counts_packed).
-    """
-
-    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pi, A, B = bc_model.value
-        n, m = A.shape[0], B.shape[1]
-        cpi, cA, cB = np.zeros(n), np.zeros((n, n)), np.zeros((n, m))
-        ll = 0.0
-        saw_data = False
-        for batch in batches:
-            flat, lens = _obs_arrays(batch.column("obs"))
-            weights = _finite_weights(batch.column("weight")) if weighted else None
-            if flat.size == 0:
-                continue
-            saw_data = True
-            ll += e_step_counts_packed(pi, A, B, flat, lens, cpi, cA, cB, weights)
-        if not saw_data:
-            return
-        block = encode_counts(cpi, cA, cB)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([ll], pa.float64()),
-                pa.ListArray.from_arrays(pa.array([0, block.size], pa.int32()), block),
-            ],
-            names=["loglik", "counts"],
-        )
-
-    return compute
+def _soft_counts(model: HMM, batch, flat, lens, cpi, cA, cB) -> float:
+    """Soft E-step accumulate step: the packed forward-backward kernel. A
+    ``weight`` column scales every sequence's counts/loglik by it
+    (deduplicated-corpus multiplicity semantics — see
+    kernel.e_step_counts_packed)."""
+    weights = _finite_weights(batch.column("weight")) if "weight" in batch.schema.names else None
+    return e_step_counts_packed(model.pi, model.A, model.B, flat, lens, cpi, cA, cB, weights)
 
 
 def expected_counts(
     sequences: DataFrame, bc_model, weight_col: str | None = None
 ) -> DataFrame:
-    """One E-step over the corpus -> one ``(loglik, counts)`` row per task
-    (COUNT_BLOCK_SCHEMA): a narrow mapInArrow, no shuffle. Fold the
-    collected rows with :func:`fold_counts`, or sum them in Catalyst with
-    :func:`tidy_counts`."""
+    """One soft E-step over the corpus -> one ``(loglik, counts)`` row per
+    task (COUNT_BLOCK_SCHEMA, :func:`hmm_layout` blocks): a narrow
+    mapInArrow, no shuffle. ``bc_model`` broadcasts the :class:`HMM`. Fold
+    the collected rows with :func:`fold_counts`, or sum them in Catalyst
+    with :func:`tidy_counts`."""
     if weight_col is None:
         inp = sequences.select("obs")
     else:
         inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
-    return inp.mapInArrow(
-        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNT_BLOCK_SCHEMA
-    )
-
-
-GROUPED_COUNTS_SCHEMA = "group string, kind string, i int, j int, weight double"
-
-
-def grouped_e_step_udf(bc_models):
-    """mapInPandas function for one E-step pass over (group, obs) rows with
-    a PER-GROUP model: ``bc_models.value`` is {group: (pi, A, B)}, with an
-    optional ``None`` key as the shared default (every group not frozen out
-    uses it — the one-step re-estimate case). Groups absent from the dict
-    (and no default) are skipped — that is how the driver loop freezes
-    converged groups without repartitioning the corpus.
-
-    Emits one flattened count block per (Arrow batch, group): the same
-    in-UDF map-side combine as ``e_step_udf``, so per-iteration shuffle
-    volume is O(partitions × groups-per-partition × N(N+M)) — corpus-size
-    independent, exactly the single-model posture with a group key added.
-    """
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        models = bc_models.value
-        default = models.get(None)
-        acc: dict[str, list] = {}
-        for pdf in batches:
-            for group, sub in pdf.groupby("group", sort=False):
-                triple = models.get(group, default)
-                if triple is None:
-                    continue
-                pi, A, B = triple
-                obs_list = [
-                    np.asarray(o, dtype=np.int64)
-                    for o in sub["obs"]
-                    if o is not None and len(o) > 0
-                ]
-                if not obs_list:
-                    continue
-                a = acc.setdefault(
-                    str(group),
-                    [np.zeros_like(pi), np.zeros_like(A), np.zeros(B.shape), 0.0],
-                )
-                a[3] += e_step_counts_batch(pi, A, B, obs_list, a[0], a[1], a[2])
-        if not acc:
-            return
-        groups, kinds, iis, jjs, weights = [], [], [], [], []
-        for group, (cpi, cA, cB, ll) in acc.items():
-            n, m = cA.shape[0], cB.shape[1]
-            block_kinds = [KIND_INITIAL] * n
-            block_i = [0] * n
-            block_j = list(range(n))
-            block_w = list(cpi)
-            for i in range(n):
-                block_kinds += [KIND_TRANSITION] * n
-                block_i += [i] * n
-                block_j += list(range(n))
-                block_w += list(cA[i])
-            for i in range(n):
-                block_kinds += [KIND_EMISSION] * m
-                block_i += [i] * m
-                block_j += list(range(m))
-                block_w += list(cB[i])
-            block_kinds.append(KIND_LOGLIK)
-            block_i.append(0)
-            block_j.append(0)
-            block_w.append(ll)
-            groups += [group] * len(block_kinds)
-            kinds += block_kinds
-            iis += block_i
-            jjs += block_j
-            weights += block_w
-        yield pd.DataFrame(
-            {"group": groups, "kind": kinds,
-             "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
-
-    return compute
+    return inp.mapInArrow(count_block_udf(bc_model, hmm_layout, _soft_counts), COUNT_BLOCK_SCHEMA)
 
 
 def expected_counts_grouped(sequences_with_group: DataFrame, bc_models) -> DataFrame:
-    """One grouped E-step over (group, obs) rows -> aggregated counts
-    (group, kind, i, j, weight) including each group's loglik row."""
-    raw = sequences_with_group.select("group", "obs").mapInPandas(
-        grouped_e_step_udf(bc_models), schema=GROUPED_COUNTS_SCHEMA
-    )
-    return raw.groupBy("group", "kind", "i", "j").agg(F.sum("weight").alias("weight"))
+    """The grouped soft E-step over (group, obs) rows: ``bc_models``
+    broadcasts {group: HMM} (see :func:`count_block_udf`), and every (task,
+    group) yields one ``(group, loglik, counts)`` row — the single-model
+    block with a group key added, still no shuffle."""
+    return sequences_with_group.select(
+        F.col("group").cast("string").alias("group"), "obs"
+    ).mapInArrow(count_block_udf(bc_models, hmm_layout, _soft_counts), GROUPED_COUNT_BLOCK_SCHEMA)
 
 
 def em_reestimate_grouped(
@@ -281,26 +257,23 @@ def em_reestimate_grouped(
     """One grouped soft-EM re-estimation step: every group's counts under
     the same FIXED ``model``, normalized per (group, kind, i) — the grouped
     twin of :func:`em_reestimate`, and the DuckDB-exact pin for the grouped
-    count shuffle itself (the aggregation path ``fit_grouped_distributed``
+    count blocks themselves (the E-step ``fit_grouped_distributed``
     iterates). Output: (group, kind, i, j, prob) rounded to 6 dp."""
-    bc = spark.sparkContext.broadcast({None: (model.pi, model.A, model.B)})
-    counts = expected_counts_grouped(sequences_with_group, bc)
-    w = Window.partitionBy("group", "kind", "i")
-    return (
-        counts.filter((F.col("kind") != KIND_LOGLIK) & (F.col("weight") > 0))
-        .withColumn("prob", F.col("weight") / F.sum("weight").over(w))
-        .select("group", "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob"))
+    bc = spark.sparkContext.broadcast({None: model})
+    counts = tidy_counts(expected_counts_grouped(sequences_with_group, bc), hmm_layout(model))
+    return normalize_counts(counts.filter(F.col("weight") > 0)).select(
+        "group", "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob")
     )
 
 
 def normalize_counts(counts: DataFrame) -> DataFrame:
     """M-step normalize as a Catalyst window — the DuckDB-checkable face of
-    the reference reducer's normalize (BaumWelchReducer.java:133-149)."""
-    w = Window.partitionBy("kind", "i")
-    return (
-        counts.filter(F.col("kind") != KIND_LOGLIK)
-        .withColumn("prob", F.col("weight") / F.sum("weight").over(w))
-        .select("kind", "i", "j", "prob")
+    the reference reducer's normalize (BaumWelchReducer.java:133-149). Key
+    columns before ``kind`` (a ``group``) partition it too."""
+    keys = counts.columns[: counts.columns.index("kind")]
+    w = Window.partitionBy(*keys, "kind", "i")
+    return counts.withColumn("prob", F.col("weight") / F.sum("weight").over(w)).select(
+        *keys, "kind", "i", "j", "prob"
     )
 
 
@@ -321,12 +294,92 @@ def _masked(model: HMM, mask: np.ndarray) -> HMM:
     ).validate()
 
 
+def discrete_m_step(init: HMM, topology_mask: np.ndarray | None = None):
+    """``(start model, M-step callable)`` of a discrete trainer. The M-step
+    normalizes the counts (kernel.m_step); with a ``topology_mask`` the
+    init is masked and the mask RE-applied after every M-step (see
+    :func:`fit`)."""
+    model = init.validate()
+    if topology_mask is None:
+        return model, lambda _prev, cpi, cA, cB: m_step(cpi, cA, cB)
+    mask = np.asarray(topology_mask, dtype=bool)
+    return _masked(model, mask), lambda _prev, cpi, cA, cB: _masked(m_step(cpi, cA, cB), mask)
+
+
 @dataclass
 class FitResult:
-    model: HMM
+    model: object  # HMM, or gaussian.GaussianHMM
     loglik_trace: list[float]
     iterations: int
     converged: bool
+
+
+def collect_counts(spark: SparkSession, model, e_step, layout: Layout) -> tuple:
+    """One E-step round trip: broadcast ``model``, collect the
+    ``e_step(bc)`` count blocks, unpersist the broadcast, and
+    :func:`fold_counts` the blocks -> ``(*arrays, loglik)``."""
+    bc = spark.sparkContext.broadcast(model)
+    try:
+        rows = e_step(bc).collect()
+    finally:
+        bc.unpersist()
+    return fold_counts(rows, layout)
+
+
+def em_loop(
+    spark: SparkSession,
+    sequences: DataFrame,
+    model,
+    e_step,
+    m_step,
+    layout: Layout,
+    max_iter: int,
+    tol: float,
+) -> FitResult:
+    """The EM driver loop of every single-model trainer (reference driver
+    D2, BaumWelchDriver.java:114-134).
+
+    Per iteration: :func:`collect_counts` (broadcast the model ->
+    ``e_step(sequences, bc)`` count blocks -> collect -> fold along
+    ``layout``) -> ``m_step(model, *arrays)`` -> convergence test on
+    ``model.distance`` (the reference's D4 model-space test; a hard-EM
+    loglik is not monotone, so it is not the test). A NaN log-likelihood
+    or a non-finite count raises ValueError naming the iteration instead
+    of normalizing into a plausible-looking model; a -inf loglik (an
+    impossible hard-EM path) is kept.
+
+    ``sequences`` is persisted for the loop unless the caller already did
+    (then the cache is the caller's to drop).
+    """
+    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
+    if not caller_persisted:
+        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
+    trace: list[float] = []
+    converged = False
+    iterations = 0
+    try:
+        for it in range(max_iter):
+            *counts, ll = collect_counts(
+                spark, model, lambda bc: e_step(sequences, bc), layout
+            )
+            if np.isnan(ll) or not all(np.isfinite(c).all() for c in counts):
+                raise ValueError(
+                    f"EM iteration {it + 1}: the E-step returned a NaN "
+                    "log-likelihood or non-finite expected counts — the "
+                    "corpus holds a NaN/infinite observation or weight"
+                )
+            trace.append(ll)
+            new_model = m_step(model, *counts)
+            delta = model.distance(new_model)
+            model = new_model
+            iterations = it + 1
+            if tol > 0 and delta < tol:
+                converged = True
+                break
+    finally:
+        if not caller_persisted:
+            sequences.unpersist()
+    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
 
 
 def fit(
@@ -339,10 +392,8 @@ def fit(
     weight_col: str | None = None,
     topology_mask: np.ndarray | None = None,
 ) -> FitResult:
-    """Distributed EM loop (reference driver D2, BaumWelchDriver.java:114-134).
-
-    Per iteration: broadcast model -> E-step mapInArrow -> collect one
-    count block per task -> NumPy fold and M-step -> convergence test. Optionally writes
+    """Distributed soft EM: :func:`em_loop` over the :func:`expected_counts`
+    E-step and the discrete M-step. Optionally writes
     ``{model_out}/model-{it}`` parquet per iteration (reference S3/S4 sinks,
     BaumWelchUtils.java:147-226, BaumWelchDriver.java:128,178).
 
@@ -362,43 +413,19 @@ def fit(
     resets zero-mass rows of an unreachable state to uniform — the
     re-application makes those uniform over ALLOWED transitions instead.
     """
-    model = init.validate()
-    if topology_mask is not None:
-        topology_mask = np.asarray(topology_mask, dtype=bool)
-        model = _masked(model, topology_mask)
-    sc = spark.sparkContext
-    # respect a caller-managed cache: persisting is fit's job only when the
-    # caller didn't already, and then so is the unpersist (ADVICE r1)
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            bc = sc.broadcast((model.pi, model.A, model.B))
-            try:
-                rows = expected_counts(sequences, bc, weight_col=weight_col).collect()
-            finally:
-                bc.unpersist()
-            cpi, cA, cB, ll = fold_counts(rows, model.n_hidden, model.n_observed)
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            if topology_mask is not None:
-                new_model = _masked(new_model, topology_mask)
-            if model_out is not None:
-                new_model.write(spark, f"{model_out}/model-{it}")
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    model, reestimate = discrete_m_step(init, topology_mask)
+    written = itertools.count()
+
+    def step(prev: HMM, *counts) -> HMM:
+        new_model = reestimate(prev, *counts)
+        if model_out is not None:
+            new_model.write(spark, f"{model_out}/model-{next(written)}")
+        return new_model
+
+    def e_step(seqs: DataFrame, bc) -> DataFrame:
+        return expected_counts(seqs, bc, weight_col=weight_col)
+
+    return em_loop(spark, sequences, model, e_step, step, hmm_layout(model), max_iter, tol)
 
 
 def fit_restarts(
@@ -490,8 +517,8 @@ def em_reestimate(
     (tidy_counts) and the window normalize are checked end-to-end, not
     just via the pytest NumPy oracle. Probabilities are strictly positive here (γ > 0 for a
     dense random model), so plain round needs no signed-zero guard."""
-    bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
-    counts = tidy_counts(expected_counts(sequences, bc), model.n_hidden, model.n_observed)
+    bc = spark.sparkContext.broadcast(model)
+    counts = tidy_counts(expected_counts(sequences, bc), hmm_layout(model))
     # weight > 0: the E-step UDF emits the DENSE N x (N+M) accumulator
     # including exactly-zero cells (a symbol absent from the corpus, or a
     # fully-underflowed state); the oracle's GROUP BYs only produce rows

@@ -3,12 +3,12 @@
 The reference engine is discrete-only (its ``HmmModel`` emission matrix is
 N x M over a finite alphabet, BaumWelchUtils.java:127-134); Rabiner 1989
 §VI extends the same EM machinery to continuous densities. This module
-re-expresses that published extension over the engine's existing
-distributed-stripe architecture (hmm/fit.py): per Arrow batch the E-step
-accumulates model-sized sufficient statistics — initial γ₀, transition ξ
-sums, and per-state emission MOMENTS (Σγ, Σγx, Σγx²) instead of per-symbol
-counts — one Catalyst partial agg combines them, and the driver's M-step is
-closed-form:
+re-expresses that published extension on the engine's one EM loop and
+count codec (hmm/fit.py): per Arrow batch the E-step accumulates
+model-sized sufficient statistics — initial γ₀, transition ξ sums, and
+per-state emission MOMENTS (Σγ, Σγx, Σγx²) instead of per-symbol counts,
+the block layout [pi | A | moments(N, 3)] (gauss_layout) — and the
+driver's M-step is closed-form:
 
     μ_j  = Σ_t γ_t(j) x_t / Σ_t γ_t(j)
     σ²_j = Σ_t γ_t(j) x_t² / Σ_t γ_t(j) − μ_j²      (floored for safety)
@@ -23,9 +23,10 @@ precomputed doubles embedded as literals) is plain SQL arithmetic, so the
 same recursive-CTE Viterbi/forward oracles pin the distributed kernels
 bit-for-bit modulo the engines' ln/exp last-ulp, absorbed by round(6).
 
-Scale posture: identical to the discrete family — model broadcast, narrow
-``mapInPandas`` E-step, one model-sized shuffle per iteration, no
-data-sized driver materialization.
+Scale posture: identical to the discrete family — fit.em_loop broadcasts
+the model, the narrow fit.count_block_udf mapInArrow E-step yields one
+count block per task, the driver folds them; no shuffle, no data-sized
+driver materialization.
 """
 
 from __future__ import annotations
@@ -39,14 +40,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.fit import (
+    COUNT_BLOCK_SCHEMA,
+    FitResult,
+    Layout,
+    count_block_udf,
+    em_loop,
+    split_sequences,
+    tidy_counts,
+)
+
 VAR_FLOOR = 1e-6
 
 KIND_INITIAL = "initial"
 KIND_TRANSITION = "transition"
 KIND_MOMENT = "moment"  # j = 0 (Σγ), 1 (Σγx), 2 (Σγx²)
-KIND_LOGLIK = "loglik"
 
-GCOUNTS_SCHEMA = "kind string, i int, j int, weight double"
 VALUE_SEQUENCES_SCHEMA = "seq_id bigint, obs array<double>"
 
 
@@ -290,54 +299,28 @@ def build_value_sequences(
     )
 
 
-@dataclass
-class GaussFitResult:
-    model: GaussianHMM
-    loglik_trace: list[float]
-    iterations: int
-    converged: bool
+def gauss_layout(model: GaussianHMM) -> Layout:
+    """The Gaussian family's count layout: ``[pi | A | moments(N, 3)]``."""
+    n = model.pi.shape[0]
+    return ((KIND_INITIAL, (n,)), (KIND_TRANSITION, (n, n)), (KIND_MOMENT, (n, 3)))
 
 
-def _gauss_estep_udf(bc_model):
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = bc_model.value
-        n = model.pi.shape[0]
-        cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
-        ll, saw = 0.0, False
-        for pdf in batches:
-            for obs in pdf["obs"]:
-                if obs is None or len(obs) == 0:
-                    continue
-                saw = True
-                ll += e_step_moments(
-                    model, np.asarray(obs, dtype=np.float64), cpi, cA, cm
-                )
-        if not saw:
-            return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_MOMENT] * 3
-            iis += [i] * 3
-            jjs += [0, 1, 2]
-            weights += list(cm[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+def _moment_counts(model: GaussianHMM, batch, flat, lens, cpi, cA, cm) -> float:
+    """Gaussian accumulate step: expected counts + emission moments of
+    every sequence of the batch (:func:`e_step_moments`)."""
+    ll = 0.0
+    for x in split_sequences(flat, lens):
+        ll += e_step_moments(model, x, cpi, cA, cm)
+    return ll
 
-    return compute
+
+def moment_counts(sequences: DataFrame, bc_model) -> DataFrame:
+    """One Gaussian E-step over the corpus -> one ``(loglik, counts)`` row
+    per task (fit.COUNT_BLOCK_SCHEMA, :func:`gauss_layout` blocks);
+    ``bc_model`` broadcasts the :class:`GaussianHMM`."""
+    return sequences.select("obs").mapInArrow(
+        count_block_udf(bc_model, gauss_layout, _moment_counts), COUNT_BLOCK_SCHEMA
+    )
 
 
 def fit_gaussian(
@@ -346,51 +329,15 @@ def fit_gaussian(
     init: GaussianHMM,
     max_iter: int = 10,
     tol: float = 0.0,
-) -> GaussFitResult:
-    """Distributed EM for the Gaussian family — the fit.py loop shape:
-    broadcast model -> E-step mapInPandas -> model-sized groupBy sum ->
-    collect stripes -> closed-form M-step -> convergence test."""
+) -> FitResult:
+    """Distributed EM for the Gaussian family: fit.em_loop over the
+    :func:`moment_counts` E-step and the closed-form :func:`m_step_gauss`.
+    The corpus is persisted for the loop unless the caller already did, so
+    the sequence build runs once, not once per iteration."""
     model = init.validate()
-    trace: list[float] = []
-    converged = False
-    # materialize the sequence build once across EM iterations (the discrete
-    # fit()'s persist pattern, guide §3.3/§5): without it every iteration's
-    # E-step re-runs the corpus groupBy/collect_list from the events scan —
-    # max_iter corpus shuffles for one build's worth of work. Lazy local
-    # checkpoint: the first E-step materializes it; partitioning equals the
-    # un-checkpointed plan's post-AQE layout, so per-task accumulation order
-    # (and hence every float) is unchanged.
-    src = sequences.select("obs").localCheckpoint(eager=False)
-    it = 0
-    for it in range(1, max_iter + 1):
-        bc = spark.sparkContext.broadcast(model)
-        agg = (
-            src.mapInPandas(_gauss_estep_udf(bc), schema=GCOUNTS_SCHEMA)
-            .groupBy("kind", "i", "j")
-            .agg(F.sum("weight").alias("weight"))
-            .collect()
-        )
-        bc.destroy()
-        n = model.pi.shape[0]
-        cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
-        ll = 0.0
-        for r in agg:
-            if r.kind == KIND_LOGLIK:
-                ll = r.weight
-            elif r.kind == KIND_INITIAL:
-                cpi[r.j] = r.weight
-            elif r.kind == KIND_TRANSITION:
-                cA[r.i, r.j] = r.weight
-            elif r.kind == KIND_MOMENT:
-                cm[r.i, r.j] = r.weight
-        trace.append(ll)
-        new_model = m_step_gauss(model, cpi, cA, cm)
-        delta = model.distance(new_model)
-        model = new_model
-        if tol > 0 and delta < tol:
-            converged = True
-            break
-    return GaussFitResult(model=model, loglik_trace=trace, iterations=it, converged=converged)
+    return em_loop(
+        spark, sequences, model, moment_counts, m_step_gauss, gauss_layout(model), max_iter, tol
+    )
 
 
 # --- decode / score (DuckDB-exact faces) -----------------------------------
@@ -658,15 +605,8 @@ def _ghmm_reestimate_unchecked(
     """ghmm_reestimate body without the validate() gate: the chained trace
     (ghmm_em_trace) feeds 6-dp-ROUNDED models whose pi/A sums are off by up
     to ~2e-6 — within the trace contract but outside validate's 1e-8."""
-    from pyspark.sql import Window
-
     bc = spark.sparkContext.broadcast(model)
-    counts = (
-        sequences.select("obs")
-        .mapInPandas(_gauss_estep_udf(bc), schema=GCOUNTS_SCHEMA)
-        .groupBy("kind", "i", "j")
-        .agg(F.sum("weight").alias("weight"))
-    )
+    counts = tidy_counts(moment_counts(sequences, bc), gauss_layout(model))
     w = Window.partitionBy("kind", "i")
     probs = (
         counts.filter(F.col("kind").isin(KIND_INITIAL, KIND_TRANSITION))

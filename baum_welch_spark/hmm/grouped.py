@@ -102,12 +102,14 @@ def fit_grouped_distributed(
     few groups hold most of the data (per-domain models over a 100 TB
     corpus with 10 domains: 10 tasks do all the work). This variant keeps
     the single-model ``fit`` posture — per iteration ONE job over ALL
-    groups' sequences (parallelism = partitions, wherever the data sits),
-    an in-UDF map-side combine per (batch, group), a
-    groupBy(group, kind, i, j) count shuffle that is model×groups-sized,
-    and a driver M-step per group on the collected tiny counts. Converged
+    groups' sequences (parallelism = partitions, wherever the data sits)
+    through the same mapInArrow count-block E-step
+    (fit.expected_counts_grouped): each task yields one [pi | A | B] block
+    per group it saw, keyed by group, with no shuffle; the driver folds
+    each group's blocks (fit.fold_counts) and M-steps each group. Converged
     groups freeze out of later iterations (their sequences are filtered
-    before the E-step, so finished groups cost nothing).
+    before the E-step, so finished groups cost nothing). The per-group
+    freeze makes this its own loop rather than fit.em_loop.
 
     Same init contract as fit_grouped (every group starts from
     ``HMM.random(n_hidden, n_observed, seed)``); per-group results match
@@ -121,16 +123,11 @@ def fit_grouped_distributed(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from baum_welch_spark.hmm.fit import expected_counts_grouped
+    from baum_welch_spark.hmm.fit import expected_counts_grouped, fold_counts, hmm_layout
     from baum_welch_spark.hmm.kernel import m_step
-    from baum_welch_spark.hmm.model import (
-        KIND_EMISSION,
-        KIND_INITIAL,
-        KIND_TRANSITION,
-    )
-    from baum_welch_spark.hmm.fit import KIND_LOGLIK
 
     init = HMM.random(n_hidden, n_observed, seed=seed)
+    layout = hmm_layout(init)
     # cast the group key to string up front: the broadcast model dict is
     # keyed by str, and a non-string group column would otherwise miss the
     # lookup inside the E-step UDF and silently drop the group
@@ -158,51 +155,25 @@ def fit_grouped_distributed(
                 if len(active) == len(models)
                 else data.filter(F.col("group").isin(sorted(active)))
             )
-            bc = sc.broadcast(
-                {g: (models[g].pi, models[g].A, models[g].B) for g in active}
-            )
+            bc = sc.broadcast({g: models[g] for g in active})
             try:
                 rows = expected_counts_grouped(src, bc).collect()
             finally:
                 bc.unpersist()
-            acc: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-            ll_now: dict[str, float] = {}
+            blocks: dict[str, list] = {}
             for r in rows:
-                g = str(r.group)
-                if r.kind == KIND_LOGLIK:
-                    ll_now[g] = r.weight
-                    continue
-                if g not in acc:
-                    acc[g] = (
-                        np.zeros(n_hidden),
-                        np.zeros((n_hidden, n_hidden)),
-                        np.zeros((n_hidden, n_observed)),
-                    )
-                cpi, cA, cB = acc[g]
-                if r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
+                blocks.setdefault(r.group, []).append(r)
             # iterate over ACTIVE groups, not just groups that produced
-            # counts: a group whose sequences are all empty emits nothing,
+            # blocks: a group whose sequences are all empty emits nothing,
             # and sequential EM (fit_grouped) still runs its M-step on zero
-            # counts (-> uniform model, loglik 0.0) — parity demands the
-            # same here
+            # counts (-> uniform model, loglik 0.0) — fold_counts of no
+            # rows gives exactly that
             for g in sorted(active):
-                tri = acc.get(
-                    g,
-                    (
-                        np.zeros(n_hidden),
-                        np.zeros((n_hidden, n_hidden)),
-                        np.zeros((n_hidden, n_observed)),
-                    ),
-                )
-                new_model = m_step(*tri)
+                cpi, cA, cB, ll = fold_counts(blocks.get(g, []), layout)
+                new_model = m_step(cpi, cA, cB)
                 delta = models[g].distance(new_model)
                 models[g] = new_model
-                last_ll[g] = ll_now.get(g, 0.0)
+                last_ll[g] = ll
                 if tol > 0 and delta < tol:
                     active.discard(g)
     finally:

@@ -194,6 +194,20 @@ def _length_buckets(lens: list[int]) -> list[list[int]]:
     return [buckets[k] for k in sorted(buckets)]
 
 
+def check_symbol_ids(flat: np.ndarray, m: int) -> None:
+    """The discrete boundary contract: every symbol id is in [0, M). NumPy
+    would read a negative id from the end of ``B`` (so ``[0, 1, -1]``
+    silently scores as ``[0, 1, M-1]``) and fail opaquely on an id >= M;
+    both raise here."""
+    if flat.size == 0:
+        return
+    lo_id, hi_id = int(flat.min()), int(flat.max())
+    if lo_id < 0 or hi_id >= m:
+        raise ValueError(
+            f"symbol ids must be in [0, M) with M={m}: got min={lo_id} max={hi_id}"
+        )
+
+
 #: rows per emission-count bincount: keeps its (rows x N) index cache-sized
 _BINCOUNT_ROWS = 8192
 
@@ -249,20 +263,15 @@ def e_step_counts_packed(
     numerically equivalent to physically replicating the sequence w times,
     asserted in tests; fractional weights give importance weighting).
 
-    Boundary contract: every symbol id is in [0, M). NumPy would read a
-    negative id from the end of ``B`` (so ``[0, 1, -1]`` silently scored as
-    ``[0, 1, M-1]``) and fail opaquely on an id >= M; both raise here.
+    Boundary contract: every symbol id is in [0, M)
+    (:func:`check_symbol_ids`).
     """
     flat = np.asarray(flat)
     lens = np.asarray(lens, dtype=np.int64)
     if flat.size == 0:
         return 0.0
     N, M = A.shape[0], B.shape[1]
-    lo_id, hi_id = int(flat.min()), int(flat.max())
-    if lo_id < 0 or hi_id >= M:
-        raise ValueError(
-            f"symbol ids must be in [0, M) with M={M}: got min={lo_id} max={hi_id}"
-        )
+    check_symbol_ids(flat, M)
     order, starts = _packed_layout(lens)
     K, S, T = starts[-1], starts[1], len(starts) - 1
     n_t = np.diff(starts)

@@ -4,11 +4,11 @@ reference trains offline only, BaumWelchDriver.java:114-184; algorithm per
 Cappe & Moulines 2009, "On-line expectation-maximization algorithm for
 latent data models", and Liang & Klein 2009's stepwise-EM formulation).
 
-Per micro-batch t the SAME distributed E-step the batch loop uses
-(``fit.expected_counts`` — mapInArrow, one count-block row per task, model
-broadcast, folded by ``fit.fold_counts``) produces the batch's expected
-counts; the running sufficient statistics then take a stepwise-decaying
-interpolation
+Per micro-batch t the SAME E-step round trip the batch loop runs
+(``fit.collect_counts``: model broadcast, ``fit.expected_counts`` —
+mapInArrow, one count-block row per task — collected and folded by
+``fit.fold_counts``) produces the batch's expected counts; the running
+sufficient statistics then take a stepwise-decaying interpolation
 
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
@@ -33,7 +33,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.fit import expected_counts, fold_counts
+from baum_welch_spark.hmm.fit import collect_counts, expected_counts, hmm_layout
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import HMM
 
@@ -52,14 +52,9 @@ class OnlineEM:
     loglik_trace: list[float] = field(default_factory=list)
 
     def update(self, spark: SparkSession, batch: DataFrame) -> HMM:
-        n, m = self.model.n_hidden, self.model.n_observed
-        sc = spark.sparkContext
-        bc = sc.broadcast((self.model.pi, self.model.A, self.model.B))
-        try:
-            rows = expected_counts(batch, bc).collect()
-        finally:
-            bc.unpersist()
-        cpi, cA, cB, ll = fold_counts(rows, n, m)
+        cpi, cA, cB, ll = collect_counts(
+            spark, self.model, lambda bc: expected_counts(batch, bc), hmm_layout(self.model)
+        )
         n_seqs = float(cpi.sum())  # every sequence contributes exactly 1 to pi
         if n_seqs == 0:
             return self.model  # empty micro-batch: state unchanged

@@ -21,117 +21,86 @@ sum_labeled log P(O,S) + sum_unlabeled log P(O) is non-decreasing per
 iteration (EM monotonicity holds: labeled terms are exact, unlabeled terms
 get the usual Q-function bound).
 
-Scale shape: identical to fit() — broadcast model, ONE mapInPandas pass
-over the mixed corpus (each Arrow batch splits itself into labeled/
-unlabeled rows), model-sized count shuffle, driver M-step.
+Scale shape: the fit() engine itself — fit.em_loop broadcasts the model,
+the fit.count_block_udf mapInArrow shell runs :func:`_mixed_counts` over
+every Arrow batch of the mixed corpus (each batch splits itself into
+labeled/unlabeled rows) and yields one [pi | A | B] count block per task,
+and the driver folds the blocks and runs the M-step — no shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from baum_welch_spark.hmm.fit import COUNTS_SCHEMA, KIND_LOGLIK, FitResult
-from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
-from baum_welch_spark.hmm.model import (
-    HMM,
-    KIND_EMISSION,
-    KIND_INITIAL,
-    KIND_TRANSITION,
+from baum_welch_spark.hmm.fit import (
+    COUNT_BLOCK_SCHEMA,
+    FitResult,
+    count_block_udf,
+    discrete_m_step,
+    em_loop,
+    hmm_layout,
 )
+from baum_welch_spark.hmm.kernel import e_step_counts_packed
+from baum_welch_spark.hmm.model import HMM
 
 
-def _labeled_counts(
-    log_pi, log_A, log_B, obs_list, states_list, cpi, cA, cB
-) -> float:
-    """Hard counts + complete-data loglik for labeled sequences."""
-    ll = 0.0
-    for obs, st in zip(obs_list, states_list):
-        cpi[st[0]] += 1.0
-        ll += log_pi[st[0]] + log_B[st[0], obs[0]]
-        for t in range(1, len(obs)):
-            cA[st[t - 1], st[t]] += 1.0
-            cB[st[t], obs[t]] += 1.0
-            ll += log_A[st[t - 1], st[t]] + log_B[st[t], obs[t]]
-        cB[st[0], obs[0]] += 1.0
-    return ll
+def _labeled_counts(model: HMM, obs, states, lens, cpi, cA, cB) -> float:
+    """Hard counts + complete-data loglik of packed labeled sequences
+    (``states`` aligned with ``obs``, every length > 0)."""
+    with np.errstate(divide="ignore"):
+        log_pi, log_A, log_B = np.log(model.pi), np.log(model.A), np.log(model.B)
+    first = np.cumsum(lens) - lens  # t = 0 of each sequence
+    later = np.ones(obs.size, dtype=bool)
+    later[first] = False
+    prev, cur = states[np.flatnonzero(later) - 1], states[later]
+    np.add.at(cpi, states[first], 1.0)
+    np.add.at(cA, (prev, cur), 1.0)
+    np.add.at(cB, (states, obs), 1.0)
+    return float(
+        log_pi[states[first]].sum() + log_A[prev, cur].sum() + log_B[states, obs].sum()
+    )
 
 
-def _semisup_udf(bc_model):
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pi, A, B = bc_model.value
-        n, m = A.shape[0], B.shape[1]
-        with np.errstate(divide="ignore"):
-            log_pi, log_A, log_B = np.log(pi), np.log(A), np.log(B)
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
-        ll = 0.0
-        saw = False
-        for pdf in batches:
-            lab_o, lab_s, unlab = [], [], []
-            for obs, st in zip(pdf["obs"], pdf["states"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                o = np.asarray(obs, dtype=np.int64)
-                if st is not None and len(st) == len(o):
-                    s = np.asarray(st, dtype=np.int64)
-                    # fail fast on out-of-range labels (mirrors fit()'s
-                    # null-weight fail-fast): a negative index — e.g. -1
-                    # used as an 'unknown' sentinel by an annotation
-                    # source — would silently wrap via numpy indexing and
-                    # corrupt the last state's counts; >= n would crash
-                    # the executor with an opaque IndexError
-                    if s.size and (s.min() < 0 or s.max() >= n):
-                        raise ValueError(
-                            f"labeled state out of range [0, {n}): "
-                            f"min={int(s.min())} max={int(s.max())} — use "
-                            "NULL (not a sentinel value) for unlabeled "
-                            "sequences"
-                        )
-                    lab_o.append(o)
-                    lab_s.append(s)
-                else:
-                    unlab.append(o)
-            if lab_o:
-                saw = True
-                ll += _labeled_counts(log_pi, log_A, log_B, lab_o, lab_s, cpi, cA, cB)
-            if unlab:
-                saw = True
-                ll += e_step_counts_batch(pi, A, B, unlab, cpi, cA, cB)
-        if not saw:
-            return
-        kinds, iis, jjs, weights = [], [], [], []
-        kinds += [KIND_INITIAL] * n
-        iis += [0] * n
-        jjs += list(range(n))
-        weights += list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
+def _mixed_counts(model: HMM, batch, flat, lens, cpi, cA, cB) -> float:
+    """Semi-supervised accumulate step: rows whose ``states`` array matches
+    their obs length count their known path; every other row runs the
+    packed soft E-step kernel."""
+    col = batch.column("states")
+    st_lens = col.value_lengths().fill_null(0).to_numpy()
+    labeled = col.is_valid().to_numpy(zero_copy_only=False) & (st_lens == lens) & (lens > 0)
+    states = col.flatten()
+    if states.null_count:
+        raise ValueError("states arrays must not contain null elements")
+    states = states.to_numpy()[np.repeat(labeled, st_lens)]
+    n = model.n_hidden
+    # fail fast on out-of-range labels (mirrors fit()'s null-weight
+    # fail-fast): a negative index — e.g. -1 used as an 'unknown' sentinel
+    # by an annotation source — would silently wrap via numpy indexing and
+    # corrupt the last state's counts; >= n would crash the executor with
+    # an opaque IndexError
+    if states.size and (states.min() < 0 or states.max() >= n):
+        raise ValueError(
+            f"labeled state out of range [0, {n}): min={int(states.min())} "
+            f"max={int(states.max())} — use NULL (not a sentinel value) for "
+            "unlabeled sequences"
         )
+    in_labeled = np.repeat(labeled, lens)
+    ll = _labeled_counts(model, flat[in_labeled], states, lens[labeled], cpi, cA, cB)
+    return ll + e_step_counts_packed(
+        model.pi, model.A, model.B, flat[~in_labeled], lens[~labeled], cpi, cA, cB
+    )
 
-    return compute
+
+def labeled_counts(sequences: DataFrame, bc_model, states_col: str = "states") -> DataFrame:
+    """One semi-supervised E-step over (obs, <states_col>) rows -> one
+    ``(loglik, counts)`` row per task (fit.COUNT_BLOCK_SCHEMA);
+    ``bc_model`` broadcasts the :class:`HMM`."""
+    return sequences.select("obs", F.col(states_col).alias("states")).mapInArrow(
+        count_block_udf(bc_model, hmm_layout, _mixed_counts), COUNT_BLOCK_SCHEMA
+    )
 
 
 def fit_semisupervised(
@@ -147,50 +116,9 @@ def fit_semisupervised(
     ``sequences``: (seq_id, obs, <states_col>) — states null (or
     length-mismatched, treated as unlabeled) for EM rows. The loglik trace
     is the mixed objective. Same cache/convergence discipline as fit()."""
-    model = init.validate()
-    sc = spark.sparkContext
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    inp = sequences.select("obs", F.col(states_col).alias("states"))
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            bc = sc.broadcast((model.pi, model.A, model.B))
-            try:
-                rows = (
-                    inp.mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA)
-                    .groupBy("kind", "i", "j")
-                    .agg(F.sum("weight").alias("weight"))
-                    .collect()
-                )
-            finally:
-                bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    model, step = discrete_m_step(init)
+
+    def e_step(seqs: DataFrame, bc) -> DataFrame:
+        return labeled_counts(seqs, bc, states_col)
+
+    return em_loop(spark, sequences, model, e_step, step, hmm_layout(model), max_iter, tol)

@@ -9,12 +9,14 @@ re-estimates from the resulting HARD counts:
     A_ij  = #(path transitions i -> j)                    / #(i in path[:-1])
     B_ik  = #(path visits i while emitting symbol k)      / #(i in path)
 
-Same dataflow shape as the soft fit (reference driver D2,
-BaumWelchDriver.java:114-134, re-expressed Spark-first): broadcast model ->
-one mapInPandas pass accumulating per-batch count stripes -> groupBy sum of
-the tiny (kind, i, j) blocks -> driver-side NumPy normalize. Shuffle volume
-per iteration is O(partitions * N * (N + M)), corpus-size-free; the Viterbi
-joint log-likelihood (sum of best-path scores) is the convergence metric.
+Same engine as the soft fit (hmm/fit.py, reference driver D2,
+BaumWelchDriver.java:114-134, re-expressed Spark-first): fit.em_loop
+broadcasts the model, the fit.count_block_udf mapInArrow shell runs the
+path-count step below over every Arrow batch and yields one [pi | A | B]
+count block per task, and the driver folds the collected blocks and
+normalizes them in NumPy — no shuffle. The Viterbi joint log-likelihood
+(sum of best-path scores) is the reported trace; convergence is the
+model-space distance test.
 
 It converges in far fewer, far cheaper iterations than soft EM (each pass is
 a single max-product DP, no backward sweep / xi accumulation) at the cost of
@@ -30,21 +32,22 @@ a sequential NumPy oracle to 1e-12.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
 from baum_welch_spark.hmm.fit import (
-    COUNTS_SCHEMA,
-    KIND_LOGLIK,
+    COUNT_BLOCK_SCHEMA,
     FitResult,
+    count_block_udf,
+    discrete_m_step,
+    em_loop,
+    hmm_layout,
     normalize_counts,
+    split_sequences,
+    tidy_counts,
 )
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import (
@@ -55,68 +58,29 @@ from baum_welch_spark.hmm.model import (
 )
 
 
-def hard_count_udf(bc_log_model):
-    """mapInPandas function for one hard-EM pass: Viterbi-decode every
-    sequence in the Arrow batch, accumulate path counts into local NumPy
-    arrays, and emit ONE flattened (kind, i, j, weight) block per batch plus
-    the Viterbi joint log-likelihood side-channel row (the in-UDF map-side
-    combine, same shape as fit.e_step_udf)."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        log_pi, log_A, log_B = bc_log_model.value
-        n, m = log_A.shape[0], log_B.shape[1]
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
-        ll = 0.0
-        saw_data = False
-        for pdf in batches:
-            for obs in pdf["obs"]:
-                if obs is None or len(obs) == 0:
-                    continue
-                saw_data = True
-                o = np.asarray(obs, dtype=np.int64)
-                path, score = _viterbi_one(log_pi, log_A, log_B, o)
-                ll += score
-                cpi[path[0]] += 1.0
-                if path.shape[0] > 1:
-                    np.add.at(cA, (path[:-1], path[1:]), 1.0)
-                np.add.at(cB, (path, o), 1.0)
-        if not saw_data:
-            return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
-
-    return compute
+def _path_counts(model: HMM, batch, flat, lens, cpi, cA, cB) -> float:
+    """Hard-EM accumulate step: Viterbi-decode every sequence of the batch
+    and count its best path's events; returns the summed path scores."""
+    with np.errstate(divide="ignore"):
+        log_pi, log_A, log_B = np.log(model.pi), np.log(model.A), np.log(model.B)
+    ll = 0.0
+    for o in split_sequences(flat, lens):
+        path, score = _viterbi_one(log_pi, log_A, log_B, o)
+        ll += score
+        cpi[path[0]] += 1.0
+        if path.shape[0] > 1:
+            np.add.at(cA, (path[:-1], path[1:]), 1.0)
+        np.add.at(cB, (path, o), 1.0)
+    return ll
 
 
-def hard_counts(sequences: DataFrame, bc_log_model) -> DataFrame:
-    """One hard-EM pass over the corpus -> aggregated (kind, i, j, weight)
-    counts, including the loglik side-channel row."""
-    raw = sequences.select("obs").mapInPandas(
-        hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA
+def hard_counts(sequences: DataFrame, bc_model) -> DataFrame:
+    """One hard-EM pass over the corpus -> one ``(loglik, counts)`` row per
+    task (fit.COUNT_BLOCK_SCHEMA, [pi | A | B] path counts); ``bc_model``
+    broadcasts the :class:`HMM`."""
+    return sequences.select("obs").mapInArrow(
+        count_block_udf(bc_model, hmm_layout, _path_counts), COUNT_BLOCK_SCHEMA
     )
-    return raw.groupBy("kind", "i", "j").agg(F.sum("weight").alias("weight"))
 
 
 def viterbi_reestimate(
@@ -132,11 +96,8 @@ def viterbi_reestimate(
     loop applies the uniform fallback driver-side (kernel.m_step).
     Integer-count / integer-count division is one exact IEEE op on both
     engines, so the oracle needs no rounding."""
-    with np.errstate(divide="ignore"):
-        bc = spark.sparkContext.broadcast(
-            (np.log(model.pi), np.log(model.A), np.log(model.B))
-        )
-    counts = hard_counts(sequences, bc)
+    bc = spark.sparkContext.broadcast(model)
+    counts = tidy_counts(hard_counts(sequences, bc), hmm_layout(model))
     return normalize_counts(counts.filter(F.col("weight") > 0))
 
 
@@ -176,10 +137,11 @@ def fit_viterbi(
     tol: float = 0.0,
     topology_mask: np.ndarray | None = None,
 ) -> FitResult:
-    """Distributed segmental k-means loop: per iteration broadcast the
-    log-model, hard-count via one mapInPandas pass, collect the tiny count
-    blocks, normalize driver-side (kernel.m_step — zero-mass rows fall back
-    to uniform), and test convergence on the Viterbi joint log-likelihood.
+    """Distributed segmental k-means: fit.em_loop over the
+    :func:`hard_counts` E-step, normalizing driver-side (kernel.m_step —
+    zero-mass rows fall back to uniform). The loglik trace is the Viterbi
+    joint log-likelihood; hard EM's loglik is not monotone in general, so
+    convergence is the model-space distance test, like the reference's D4.
 
     Same cache discipline as fit(): persists the corpus only if the caller
     didn't, and then unpersists it.
@@ -190,59 +152,8 @@ def fit_viterbi(
     Viterbi path ever uses one and masked counts are exactly zero — but
     ``m_step``'s uniform fallback for never-visited states must still be
     re-masked (uniform over allowed, not the full row)."""
-    model = init.validate()
-    if topology_mask is not None:
-        from baum_welch_spark.hmm.fit import _masked
-
-        topology_mask = np.asarray(topology_mask, dtype=bool)
-        model = _masked(model, topology_mask)
-    sc = spark.sparkContext
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            with np.errstate(divide="ignore"):
-                bc = sc.broadcast((np.log(model.pi), np.log(model.A), np.log(model.B)))
-            try:
-                rows = hard_counts(sequences, bc).collect()
-            finally:
-                bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            if topology_mask is not None:
-                from baum_welch_spark.hmm.fit import _masked
-
-                new_model = _masked(new_model, topology_mask)
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            # hard EM's loglik is not monotone in general; converge on the
-            # model-space Frobenius distance like the reference's D4 test
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    model, step = discrete_m_step(init, topology_mask)
+    return em_loop(spark, sequences, model, hard_counts, step, hmm_layout(model), max_iter, tol)
 
 
 def sequential_viterbi_train(

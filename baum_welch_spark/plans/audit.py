@@ -45,7 +45,9 @@ def plan_report(df: DataFrame) -> dict[str, object]:
         "sortmerge_joins": tree.count("SortMergeJoin"),
         "shuffles": _shuffle_count(tree),
         "wholestage_codegen": "Found 0 WholeStageCodegen" not in codegen,
-        "python_stages": tree.count("ArrowEvalPython") + tree.count("MapInPandas"),
+        "python_stages": sum(
+            tree.count(node) for node in ("ArrowEvalPython", "MapInPandas", "MapInArrow")
+        ),
         "scans": tree.count("Scan parquet"),
     }
 

@@ -6,7 +6,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm import HMM, sequential_baum_welch
-from baum_welch_spark.hmm.fit import fit, expected_counts, normalize_counts, tidy_counts
+from baum_welch_spark.hmm.fit import (
+    expected_counts,
+    fit,
+    hmm_layout,
+    normalize_counts,
+    tidy_counts,
+)
 from baum_welch_spark.operators.sequences import build_sequences, symbol_dict
 from baum_welch_spark.sources.io import load_table
 
@@ -77,9 +83,9 @@ def test_fit_loglik_monotone_and_convergence(spark, sequences_df):
 def test_normalize_counts_window(spark, sequences_df):
     """The window-normalize path (A4 as Catalyst, the oracle-checked form)."""
     init = HMM.random(N_HIDDEN, N_OBSERVED, seed=1)
-    bc = spark.sparkContext.broadcast((init.pi, init.A, init.B))
+    bc = spark.sparkContext.broadcast(init)
     model_df = normalize_counts(
-        tidy_counts(expected_counts(sequences_df, bc), N_HIDDEN, N_OBSERVED)
+        tidy_counts(expected_counts(sequences_df, bc), hmm_layout(init))
     ).collect()
     bc.unpersist()
     m = HMM.from_rows([(r.kind, r.i, r.j, r.prob) for r in model_df])
@@ -361,7 +367,7 @@ def test_arrow_e_step_sliced_batches_nulls_and_empty_partition(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "2")
     try:
-        bc = spark.sparkContext.broadcast((init.pi, init.A, init.B))
+        bc = spark.sparkContext.broadcast(init)
         blocks = expected_counts(df, bc).collect()
         bc.unpersist()
         got = fit(spark, df, init, max_iter=3)
@@ -414,3 +420,34 @@ def test_fit_rejects_infinite_weights(spark, bad):
     df = _contract_df(spark, [[0, 1], [2, 3]], weights=[1.0, bad])
     with pytest.raises(Exception, match="weights must be finite"):
         fit(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1, weight_col="w")
+
+
+def test_trainer_e_steps_are_one_shuffle_free_arrow_stage(spark):
+    """Every single-model trainer's E-step frame is one mapInArrow stage
+    (the shared count-block shell) with no shuffle: soft EM, hard EM,
+    semi-supervised and Gaussian."""
+    from baum_welch_spark.hmm.gaussian import GaussianHMM, moment_counts
+    from baum_welch_spark.hmm.semisup import labeled_counts
+    from baum_welch_spark.hmm.viterbi_train import hard_counts
+    from baum_welch_spark.plans.audit import plan_report
+
+    seqs = spark.createDataFrame(
+        [(1, [0, 1, 2], [0, 1, 1]), (2, [3, 4], None)],
+        "seq_id long, obs array<int>, states array<int>",
+    )
+    values = spark.createDataFrame([(1, [0.5, 1.5, 0.7])], "seq_id long, obs array<double>")
+    sc = spark.sparkContext
+    bc = sc.broadcast(HMM.random(N_HIDDEN, N_OBSERVED, seed=1))
+    bc_gauss = sc.broadcast(GaussianHMM.random(2, seed=1))
+    frames = {
+        "fit": expected_counts(seqs, bc),
+        "fit_viterbi": hard_counts(seqs, bc),
+        "fit_semisupervised": labeled_counts(seqs, bc),
+        "fit_gaussian": moment_counts(values, bc_gauss),
+    }
+    for name, frame in frames.items():
+        rep = plan_report(frame)
+        assert rep["python_stages"] == 1 and rep["shuffles"] == 0, (name, rep)
+        assert frame.count() >= 1, name
+    bc.unpersist()
+    bc_gauss.unpersist()

@@ -326,3 +326,16 @@ def test_ghmm_loglik_trace_matches_score_chain_and_duckdb(spark):
 
     with pytest.raises(ValueError):
         ghmm_loglik_trace(spark, seqs, model, n_iters=0)
+
+
+def test_fit_gaussian_rejects_nan_observation(spark):
+    """One NaN value used to NaN every moment, and m_step_gauss turned the
+    NaN counts into a normal-looking model (uniform A, floored variance).
+    The EM loop raises instead, naming the iteration."""
+    seqs = spark.createDataFrame(
+        [(1, [1.0, float("nan"), 3.0]), (2, [2.0, 4.0, 1.5])],
+        "seq_id long, obs array<double>",
+    )
+    init = GaussianHMM.random(2, seed=1, lo=0.0, hi=5.0)
+    with pytest.raises(ValueError, match="EM iteration 1"):
+        fit_gaussian(spark, seqs, init, max_iter=2)

@@ -39,25 +39,20 @@ ALLOWED = {
     "operators/pq.py": {"collect": 7, "toPandas": 0},
     "operators/sequences.py": {"collect": 1, "toPandas": 0},
     "hmm/model.py": {"collect": 1, "toPandas": 0},
-    # fit loop's model-sized expected-counts collect + em_trace's per-lap
-    # chained-model collect (N^2 + N*M + N rows, r12 EM-loop pin)
+    # the one EM round trip's model-sized count-block collect
+    # (collect_counts: one block per task, shared by every trainer and the
+    # online update) + em_trace's per-lap chained-model collect
+    # (N^2 + N*M + N rows, r12 EM-loop pin)
     "hmm/fit.py": {"collect": 2, "toPandas": 0},
     # distributed grouped EM: one group-cardinality meta collect + the
-    # per-iteration (groups x model)-sized count-stripe collect — the
+    # per-iteration (groups x model)-sized count-block collect — the
     # grouped analogue of fit.py's site (groups bound driver memory by
     # the trainer's own output contract)
     "hmm/grouped.py": {"collect": 2, "toPandas": 0},
-    # online EM: same model-sized expected-counts collect as fit.py
-    "hmm/online.py": {"collect": 1, "toPandas": 0},
-    # Gaussian-emission EM: model-sized stripe collect (fit loop) + the
-    # model-codec read (tidy model rows) + ghmm_em_trace's and
-    # ghmm_loglik_trace's per-lap chained-model collects (r12/r13
-    # EM-loop pins)
-    "hmm/gaussian.py": {"collect": 4, "toPandas": 0},
-    # semi-supervised EM: same model-sized count-stripe collect as fit.py
-    "hmm/semisup.py": {"collect": 1, "toPandas": 0},
-    # hard EM (segmental k-means): same model-sized count-stripe collect
-    "hmm/viterbi_train.py": {"collect": 1, "toPandas": 0},
+    # Gaussian-emission family: the model-codec read (tidy model rows) +
+    # ghmm_em_trace's and ghmm_loglik_trace's per-lap chained-model
+    # collects (r12/r13 EM-loop pins); its EM loop collects in fit.py
+    "hmm/gaussian.py": {"collect": 3, "toPandas": 0},
     # order selection: one 1-row T_total aggregate (fits use fit.py's site)
     "hmm/select.py": {"collect": 1, "toPandas": 0},
     # CLI select: prints the len(candidates)-row score frame as JSON;
@@ -251,6 +246,10 @@ def test_driver_window_stays_oracle_dense():
         # The rows-only r15 residents (ghmm_fit, ghmm_trace, the IVF-PQ
         # serving family) rotated OUT first, code-unchanged with r15 driver
         # evidence, so the window gives up as few exact faces as possible.
+        # The one-EM-engine change (fit.em_loop + one count-block codec)
+        # then moved fit_gaussian onto the shared loop, so ghmm_fit and
+        # ghmm_trace drifted and rotated back in, pinned by the 1e-8
+        # sequential Gaussian EM oracle and the in-face monotone check.
         "hmm_fit",
         "hmm_fit_bakis",
         "hmm_fit_restarts",
@@ -260,6 +259,8 @@ def test_driver_window_stays_oracle_dense():
         "grouped_decode",
         "hmm_fit_grouped_dist",
         "hmm_fit_semisup",
+        "ghmm_fit",
+        "ghmm_trace",
     }, rows_only_in_window
 
 
@@ -293,3 +294,55 @@ def test_window_faces_have_scalar_schemas(spark):
         "string, e.g. hmm/decode.py viterbi_decode_face's path_str):\n"
         + "\n".join(bad)
     )
+
+
+#: hmm/ functions allowed a mapInPandas pass: the serving paths (decode,
+#: score, sample, generate). A trainer E-step runs the one count-block
+#: shell in hmm/fit.py (fit.count_block_udf under mapInArrow) instead.
+SERVING_MAP_IN_PANDAS = {
+    ("decode.py", "viterbi_decode"),
+    ("decode.py", "posterior_decode"),
+    ("decode.py", "state_occupancy"),
+    ("decode.py", "score_sequences"),
+    ("decode.py", "viterbi_topk"),
+    ("gaussian.py", "viterbi_gauss"),
+    ("gaussian.py", "_score_gauss_unchecked"),
+    ("generate.py", "generate_sequences"),
+    ("sample.py", "posterior_sample"),
+    ("sample.py", "posterior_entropy"),
+}
+
+
+def test_hmm_trainers_share_one_count_codec():
+    """One expected-count codec: no module in hmm/ outside fit.py declares
+    a tidy (kind, i, j, weight) stripe schema, no trainer E-step runs a
+    mapInPandas pass, and every mapInArrow pass in hmm/ runs the shared
+    count_block_udf shell (so it yields fit.encode_counts blocks)."""
+    stripe = "kind string, i int, j int, weight double"
+    bad = []
+    for path in sorted((PKG / "hmm").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        if path.name != "fit.py" and any(
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.endswith(stripe)
+            for node in ast.walk(tree)
+        ):
+            bad.append(f"{path.name}: declares a tidy count-stripe schema")
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                site = f"{path.name}:{fn.name}"
+                if node.func.attr == "mapInPandas" and (path.name, fn.name) not in SERVING_MAP_IN_PANDAS:
+                    bad.append(f"{site}: mapInPandas outside the serving paths")
+                if node.func.attr == "mapInArrow":
+                    udf = node.args[0] if node.args else None
+                    if not (
+                        isinstance(udf, ast.Call)
+                        and getattr(udf.func, "id", None) == "count_block_udf"
+                    ):
+                        bad.append(f"{site}: mapInArrow without fit.count_block_udf")
+    assert not bad, bad

@@ -98,3 +98,9 @@ def test_out_of_range_labels_fail_fast(spark):
     )
     with pytest.raises(Exception, match="labeled state out of range"):
         fit_semisupervised(spark, seqs, HMM.random(N, M, seed=7), max_iter=1)
+    # a labeled sequence with a -1 symbol used to count it as symbol M-1
+    bad_obs = spark.createDataFrame(
+        [(1, [0, 1, -1], [0, 1, 2])], "seq_id long, obs array<int>, states array<int>"
+    )
+    with pytest.raises(Exception, match=r"symbol ids must be in \[0, M\)"):
+        fit_semisupervised(spark, bad_obs, HMM.random(N, M, seed=7), max_iter=1)

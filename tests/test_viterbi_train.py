@@ -125,3 +125,13 @@ def test_fit_viterbi_topology_mask_preserved(spark):
     assert np.all(A[~mask] == 0.0)
     np.testing.assert_allclose(A.sum(axis=1), 1.0, atol=1e-12)
     np.testing.assert_allclose(res.model.pi, np.eye(3)[0], atol=1e-12)
+
+
+def test_fit_viterbi_rejects_out_of_range_symbol_ids(spark):
+    """[0, 1, -1] used to decode like [0, 1, M-1]: NumPy reads -1 from the
+    end of log B. The shared obs decode rejects it."""
+    df = spark.createDataFrame(
+        [(1, [0, 1, -1]), (2, [2, 3])], "seq_id long, obs array<int>"
+    )
+    with pytest.raises(Exception, match=r"symbol ids must be in \[0, M\)"):
+        fit_viterbi(spark, df, HMM.random(N_HIDDEN, N_OBSERVED, seed=1), max_iter=1)
